@@ -14,6 +14,7 @@ Conventions shared by both sides:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +61,35 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _gate(reason: str):
+    """Mark a query as a contract/verification gate: its Spark work
+    deliberately includes the exact or brute-force baseline that
+    certifies an approximate operator. ``bench.py`` sums these apart
+    as ``gate_total`` (audit cost, not engine throughput); ``reason``
+    says what the query recomputes."""
+
+    def mark(fn):
+        fn.gate = reason
+        return fn
+
+    return mark
+
+
+def _shared_warm(reason: str):
+    """Mark a query whose bench timing is warmed by a session-shared
+    intermediate built earlier in the same run (by a sibling query or
+    by its own first rep). Each intermediate is built once per run and
+    results do not depend on order, but the per-query number is not a
+    standalone cold latency; the build cost is in ``shared_build_sec``.
+    ``reason`` names the intermediate."""
+
+    def mark(fn):
+        fn.shared_warm = reason
+        return fn
+
+    return mark
 
 
 # ---------------------------------------------------------------------------
@@ -986,6 +1016,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("shared pair graph (_ngram_pairs_shared)")
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df_cap=100 is the stop-shingle guard: shingles in >100 docs are
     dropped from index AND size counts (mirrored in the oracle CTE) —
@@ -1236,6 +1267,7 @@ def _components_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+@_shared_warm("shared components (_components_shared)")
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact near-dup pair graph
     (operators/components.py): iterative hash-min label propagation,
@@ -1248,6 +1280,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("shared components (_components_shared)")
 def q_neardup_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup closure: the corpus minus non-canonical near-dup cluster
     members (keep = min doc_id per component + all singletons).
@@ -1261,6 +1294,8 @@ def q_neardup_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id").orderBy("doc_id")
 
 
+@_gate("runs banded and exact components to compare them")
+@_shared_warm("scratch-persisted banded pair set")
 def q_banded_components_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component-level contract for the banded candidate route of
     ``operators/dedup.py neardup_components`` (the sf100 escape from
@@ -1320,6 +1355,8 @@ def q_banded_components_refinement(spark: SparkSession, sf_dir: str) -> DataFram
     return edges.crossJoin(F.broadcast(refinement))
 
 
+@_gate("runs the auto route and the exact components to compare them")
+@_shared_warm("shared components (_components_shared)")
 def q_neardup_route_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract gate for the ``candidate_route="auto"`` default
     (operators/dedup.py pick_neardup_route), SCALE-SAFE since round
@@ -1415,6 +1452,7 @@ def q_neardup_route_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("plan-keyed MinHash scratch (operators/dedup)")
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs — ORACLE-BACKED since r13 via the
     ``base_hash="md5"`` audit arm (the simhash move applied to
@@ -1432,6 +1470,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+@_shared_warm("plan-keyed SimHash fingerprint scratch (operators/dedup)")
 def q_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprint groups — ORACLE-BACKED since r13.
 
@@ -1464,6 +1503,7 @@ def q_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("plan-keyed SimHash fingerprint scratch (operators/dedup)")
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-ball SimHash near-dup pairs — ORACLE-BACKED since r13
     via the md5 audit arm (the simhash_groups move): banding recall
@@ -1478,6 +1518,8 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+@_gate("recomputes the exact shingle pairs to check LSH subset and recall")
+@_shared_warm("shared capless pair set (_ngram_pairs_capless_shared)")
 def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable MinHash-LSH quality gate. The LSH pipeline
     itself is hash-based (not SQL-expressible), but its CONTRACT is:
@@ -1527,6 +1569,8 @@ def _ngram_pairs_capless_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("recomputes the O(n^2) hamming scan to check the banded join")
+@_shared_warm("plan-keyed SimHash fingerprint scratch (operators/scratch)")
 def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable SimHash pigeonhole gate: the banded candidate
     join (4 bands, hamming ≤ 3) must find EXACTLY the brute-force
@@ -1570,6 +1614,7 @@ def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("runs a plain join beside the salted one to compare them")
 def q_salted_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted join exercised under REAL key skew, oracle-checked for
     parity with a plain join (functions/salting.py salted_join). The
@@ -1615,6 +1660,7 @@ def q_salted_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "trust the local test" into a per-round green/red driver row.
 
 
+@_gate("checks the two-stage distinct against COUNT(DISTINCT)")
 def q_skew_safe_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage skew-safe exact distinct (functions/salting.py
     count_distinct_skew_safe): stage 1 groups on (key, value) so a hot
@@ -1631,6 +1677,8 @@ def q_skew_safe_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
+@_gate("recomputes the capless exact pairs to check recall")
+@_shared_warm("shared capless pair set (_ngram_pairs_capless_shared)")
 def q_incremental_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup gate (operators/dedup.py
     minhash_incremental_pairs): 'new batch' = every 5th doc, resident
@@ -1667,6 +1715,7 @@ def q_incremental_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("checks n-gram decontamination against the exact shingle join")
 def q_decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram decontamination gate (operators/pipeline.py
     decontaminate_ngram): drop docs sharing ANY word 5-gram with the
@@ -1687,6 +1736,7 @@ def q_decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("eval-set Bloom bitset standing asset (_bloom_shared)")
 def q_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefilter n-gram decontamination (operators/pipeline.py
     decontaminate_ngram_bloom): same semantics — and the SAME oracle —
@@ -1740,6 +1790,7 @@ def _bloom_shared(spark: SparkSession, sf_dir: str) -> tuple:
     return _shared_value(spark, sf_dir, "bloom_n5", build)
 
 
+@_shared_warm("shared fuzzy contamination pairs (_fuzzy_pairs_shared)")
 def q_decontam_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy decontamination gate (operators/pipeline.py
     decontaminate_fuzzy): drop docs whose 3-gram Jaccard vs ANY eval
@@ -1783,6 +1834,7 @@ def _fuzzy_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("shared fuzzy contamination pairs (_fuzzy_pairs_shared)")
 def q_fuzzy_contam_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The contamination REPORT behind decontam_fuzzy: per
     (corpus doc, eval doc) Jaccard ≥ 0.5 with the score — what an
@@ -1822,6 +1874,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("checks the chained pipeline against its full oracle")
 def q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END curation composition gate (plans/curate.py): every
     stage — decontaminate → token/dup-word quality filter → top-2-gram
@@ -1839,6 +1892,7 @@ def q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curated.select("doc_id", "split").orderBy("doc_id")
 
 
+@_shared_warm("shared reference LM and its broadcast assets")
 def q_curate_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL curation composition gate (round 7): the r06 operator
     families run INSIDE the pipeline, where their reference pipelines
@@ -2034,6 +2088,7 @@ def _dsir_scores_shared(spark: SparkSession, sf_dir: str, portable: bool):
     return docs, _shared_persisted(spark, sf_dir, name, build)
 
 
+@_shared_warm("shared DSIR fit and score frame (_dsir_scores_shared)")
 def q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance log-weights (operators/dsir.py; Xie et al.
     NeurIPS 2023): hashed unigram+bigram features over 4096 buckets,
@@ -2046,6 +2101,7 @@ def q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scores.orderBy("doc_id")
 
 
+@_shared_warm("shared DSIR fit and score frame (_dsir_scores_shared)")
 def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gumbel top-k importance resampling: 100 docs sampled without
     replacement with inclusion probability ∝ exp(logw), noise seeded
@@ -2076,6 +2132,8 @@ _SCHEME_OVERLAP_FLOOR = 0.80
 _SCHEME_NB_AGREEMENT_FLOOR = 0.90
 
 
+@_gate("runs the md5 and xxhash DSIR schemes to compare them")
+@_shared_warm("shared DSIR fit and score frames (_dsir_scores_shared)")
 def q_dsir_scheme_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-vs-portable hash contract for the DSIR family: the
     oracle gates run the md5-prefix bucket scheme (DuckDB-computable);
@@ -2150,6 +2208,8 @@ def q_dsir_scheme_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.crossJoin(F.broadcast(overlap))
 
 
+@_gate("runs the md5 and xxhash NB schemes to compare them")
+@_shared_warm("shared NB fits and predictions (_nb_pred_shared)")
 def q_nb_scheme_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-vs-portable hash contract for the NB classifier:
     train+predict under BOTH bucket schemes; the argmax predictions
@@ -2197,6 +2257,7 @@ def q_nb_scheme_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("shared LM score frame (_lm_scores_shared)")
 def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail perplexity terciles
     (operators/text.py ppl_bucket_assign): score every doc under the
@@ -2268,6 +2329,7 @@ def _nb_pred_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_persisted(spark, sf_dir, "nb_pred_md5", build)
 
 
+@_shared_warm("shared NB fit and predictions (_nb_pred_shared)")
 def q_nb_lang_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supervised hashed-feature classifier gate
     (operators/classifier.py; the CCNet §4 fastText-filter shape as
@@ -2281,6 +2343,7 @@ def q_nb_lang_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _nb_pred_shared(spark, sf_dir).orderBy("doc_id")
 
 
+@_gate("recomputes exact distinct counts to bound the HLL error")
 def q_hll_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL error-bound gate: per event type, exact distinct users
     (oracle-computed) + |approx − exact| ≤ 5%·exact. The rsd=0.02
@@ -2318,6 +2381,7 @@ def q_hll_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("recomputes exact percentiles to bound the sketch error")
 def q_approx_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-sketch error-bound gate: exact interpolated
     percentiles (oracle: quantile_cont) + percentile_approx within 1%
@@ -2343,6 +2407,7 @@ def q_approx_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("runs the exact brute-force search to check IVF recall")
 def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF recall gate: top-k overlap between the IVF-probed
     approximate search and the exact brute-force search must reach the
@@ -2364,6 +2429,8 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("checks simhash against the md5 fingerprint groups")
+@_shared_warm("plan-keyed SimHash fingerprint scratch (operators/dedup)")
 def q_simhash_exactdup_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash consistency gate: documents identical under whitespace
     normalization (same md5 fingerprint — oracle-computable) MUST get
@@ -2415,6 +2482,7 @@ def _emb_moments_shared(spark: SparkSession, sf_dir: str) -> tuple:
     )
 
 
+@_shared_warm("embedding moments memo (_emb_moments_shared)")
 def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population covariance of the embedding column as (i, j, cov)
     rows (operators/embedding_stats.py embedding_covariance — ONE
@@ -2430,6 +2498,8 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_covariance(emb, moments=_emb_moments_shared(spark, sf_dir))
 
 
+@_gate("audits the PCA fit contract, not a corpus pass")
+@_shared_warm("embedding moments memo (_emb_moments_shared)")
 def q_embedding_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA fit contract gate (operators/embedding_stats.py fit_pca),
     the hll_bounds pattern: the SQL-computable number (total variance
@@ -2830,6 +2900,7 @@ def q_pair_density_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("shared SemDeDup assignment and pair stages (_sem_shared)")
 def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup within-cluster duplicate pairs (operators/semdedup.py;
     Abbas et al. arXiv:2303.09540): k=8 deterministic sampled
@@ -2842,6 +2913,7 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy("id_a", "id_b")
 
 
+@_shared_warm("shared SemDeDup assignment and pair stages (_sem_shared)")
 def q_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup closure: duplicate groups = connected components of
     the within-cluster pair graph, kept representative = min id
@@ -2859,6 +2931,7 @@ def q_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("vec_id", "label").orderBy("vec_id")
 
 
+@_shared_warm("resident (centroids, assignment) standing asset")
 def q_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-N incremental SemDeDup gate: new batch = vec_id % 50 == 0
     (the family convention), resident corpus assigned with centroids
@@ -2890,6 +2963,7 @@ def q_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+@_shared_warm("shared SemDeDup assignment and pair stages (_sem_shared)")
 def q_semdedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster SemDeDup profile — the operational check that
     num_clusters keeps cluster sizes (and the per-task Gram cost)
@@ -3345,6 +3419,7 @@ def q_decontam_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_gate("route audit against a manufactured 1.2M-entry blocklist")
 def q_decontam_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocklist-scale decontamination: the same exclusion semantics as
     ``decontam_docs`` but with a ~1.2M-row blocklist (the real eval
@@ -3492,6 +3567,7 @@ def q_span_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strip_duplicate_spans(docs, k=13).orderBy("doc_id")
 
 
+@_shared_warm("window_index standing asset; the probe pass still runs")
 def q_span_strip_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus strip through the STANDING-index route (r14,
     span_dedup.strip_duplicate_spans_with_index): the arrow-family
@@ -3518,7 +3594,7 @@ def q_span_strip_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Session-share the built index (distinct-content-sized — orders
     # of magnitude below site volume) exactly like the Bloom bitset
     # standing asset; the strip's probe site pass over the corpus
-    # still runs in full every execution. Listed in bench SHARED_WARM;
+    # still runs in full every execution. Marked @_shared_warm;
     # build cost reported in shared_build_sec.
     idx = _shared_persisted(
         spark, sf_dir, "span_index_arrow",
@@ -3549,6 +3625,7 @@ def q_span_strip_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+@_shared_warm("shared %7==3 reference LM (_ref_lm_shared)")
 def q_bigram_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style model-based quality scoring (operators/text.py
     train_bigram_lm / bigram_lm_score): per-doc cross-entropy and
@@ -3569,6 +3646,7 @@ def q_bigram_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_shared_warm("reference-LM broadcast assets (_ref_lm_assets_shared)")
 def q_bigram_lm_ppl_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Direct oracle attestation of the r11 COLUMN route for LM
     scoring (operators/text.py bigram_lm_ppl_column): the exact
@@ -3597,6 +3675,8 @@ def q_bigram_lm_ppl_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.localCheckpoint(eager=False).orderBy("doc_id")
 
 
+@_gate("scores under the pruned LM and the exact LM to compare them")
+@_shared_warm("shared %7==3 reference LM (_ref_lm_shared)")
 def q_ppl_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-LM scoring under a MIN-COUNT-PRUNED model
     (operators/text.py thin_bigram_lm): singleton bigrams dropped
@@ -3615,6 +3695,8 @@ def q_ppl_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_lm_score(docs, uni, bi, alpha=0.1).orderBy("doc_id")
 
 
+@_gate("scores under the CMS LM and the exact LM to compare them")
+@_shared_warm("shared reference LM, LM scores and dense CMS map")
 def q_ppl_cms_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CMS-thinned corpus-LM contract gate (operators/text.py
     bigram_lm_score_cms + cms_bigram_sketch): the sketch only
@@ -3823,7 +3905,7 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.shuffle_corpus(docs).orderBy("doc_id")
 
 
-def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_table_diff_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style keyed diff of two corpus versions (operators/
     table_diff.py): v2 deterministically drops doc_id%7==0, rewrites
     text for doc_id%5==0, and appends new ids. One full-outer shuffle
@@ -3905,13 +3987,13 @@ def _acquire(spark: SparkSession) -> SparkSession:
 
 
 def _with_session(fn: Callable[[SparkSession, str], DataFrame]):
-    """Bind a query callable to the acquisition boundary."""
+    """Bind a query callable to the acquisition boundary; ``wraps``
+    keeps its name, docstring and ``@_gate``/``@_shared_warm`` marks."""
 
+    @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fn(_acquire(spark), sf_dir)
 
-    run.__name__ = getattr(fn, "__name__", "query")
-    run.__doc__ = fn.__doc__
     return run
 
 
@@ -3920,336 +4002,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_daily_event_metrics(_acquire(spark), SF_DEFAULT)
 
 
-def _query_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The STABLE name→callable registry. Dict order here is only the
-    # final tie-break inside a freshness class — the ordering the
-    # driver sees is _GATE_ORDER below (generated each round-open by
-    # `python tools/gate_rotation.py --apply`, which sorts by
-    # least-recently-driver-verified; see COVERAGE.md "gate window").
-    # The grouping comments below record the r10 snapshot they were
-    # written under and are NOT the served order anymore.
-    q = {
-        # --- edited after their last driver row (r10 head; must be
-        #     re-attested): neardup_route_auto rewritten scale-safe
-        #     this round (schema change), nb_scheme_consistency's
-        #     agreement column renamed r09, banded_components_
-        #     refinement's zero-pair fix r09, and curate_pipeline_full
-        #     whose EXERCISED PATH changed this round (curate.py's
-        #     lm_impl="auto" default routes its ppl stage through the
-        #     Arrow scorer — its r09 green row attests the native
-        #     route) ---------------------------------------------------
-        "neardup_route_auto": q_neardup_route_auto,
-        "nb_scheme_consistency": q_nb_scheme_consistency,
-        "banded_components_refinement": q_banded_components_refinement,
-        "curate_pipeline_full": q_curate_pipeline_full,
-        "curate_pipeline_rep": q_curate_pipeline_rep,
-        # --- latest driver row r07 (stalest oracle-backed; hit the
-        #     two-round bound at r10 — gate_rotation.py's lead list) ---
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "corpus_shuffle": q_corpus_shuffle,
-        "decontam_bloom": q_decontam_bloom,
-        "decontam_fuzzy": q_decontam_fuzzy,
-        "dsir_resample": q_dsir_resample,
-        "fuzzy_contam_pairs": q_fuzzy_contam_pairs,
-        "gopher_filter": q_gopher_filter,
-        "gopher_stats": q_gopher_stats,
-        "nb_lang_predict": q_nb_lang_predict,
-        "ppl_buckets": q_ppl_buckets,
-        "semdedup_incremental": q_semdedup_incremental,
-        "semdedup_keep": q_semdedup_keep,
-        "semdedup_pca_composed": q_semdedup_pca_composed,
-        "ivf_pca_composed": q_ivf_pca_composed,
-        "multimodal_decode": q_multimodal_decode,
-        "pair_density_profile": q_pair_density_profile,
-        "embedding_quantize": q_embedding_quantize,
-        "semdedup_pairs": q_semdedup_pairs,
-        "semdedup_stats": q_semdedup_stats,
-        "temperature_mix": q_temperature_mix,
-        "token_budget": q_token_budget,
-        # --- latest driver row r08 (fill the window; the tail of this
-        #     block past entry ~50 hits the bound at r11 and leads
-        #     then) ---------------------------------------------------
-        "ppl_pruned": q_ppl_pruned,
-        "ppl_cms_bound": q_ppl_cms_bound,
-        "dsir_scheme_consistency": q_dsir_scheme_consistency,
-        "incremental_neardup_recall": q_incremental_neardup_recall,
-        "hll_bounds": q_hll_bounds,
-        "skew_safe_distinct": q_skew_safe_distinct,
-        "approx_quantile_bounds": q_approx_quantile_bounds,
-        "ivf_recall": q_ivf_recall,
-        "simhash_exactdup_consistency": q_simhash_exactdup_consistency,
-        "pivot_priority_status": q_pivot_priority_status,
-        "distinct_event_dates": q_distinct_event_dates,
-        "latest_event_date": q_latest_event_date,
-        "range_reagg_busiest": q_range_reagg_busiest,
-        "group_quota_cap_sparse": q_group_quota_cap_sparse,
-        "chunk_documents": q_chunk_documents,
-        "span_dup_detect": q_span_dup_detect,
-        "span_dup_stats": q_span_dup_stats,
-        "span_strip": q_span_strip,
-        "span_strip_indexed": q_span_strip_indexed,
-        "span_strip_incremental": q_span_strip_incremental,
-        "bigram_lm_ppl": q_bigram_lm_ppl,
-        "bigram_lm_ppl_column": q_bigram_lm_ppl_column,
-        "range_series_daily": q_range_series_daily,
-        "range_hist_avg": q_range_hist_avg,
-        "range_reagg_routes": q_range_reagg_routes,
-        "asof_last_purchase": q_asof_last_purchase,
-        "range_join_error_window": q_range_join_error_window,
-        "tumbling_window_agg": q_tumbling_window_agg,
-        "sessionize": q_sessionize,
-        "cube_event_stats": q_cube_event_stats,
-        "value_quantiles": q_value_quantiles,
-        "dedup_exact": q_dedup_exact,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        "quality_scores": q_quality_scores,
-        "doc_fingerprint": q_doc_fingerprint,
-        "ngram_jaccard": q_ngram_jaccard,
-        "profile_orders": q_profile_orders,
-        "lineitem_stats": q_lineitem_stats,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "term_df": q_term_df,
-        "neardup_components": q_neardup_components,
-        "neardup_dedup_keep": q_neardup_dedup_keep,
-        "embedding_topk": q_embedding_topk,
-        "embedding_neardup": q_embedding_neardup,
-        "embedding_covariance": q_embedding_covariance,
-        "embedding_pca_invariants": q_embedding_pca_invariants,
-        "pca_evr_bound": q_pca_evr_bound,
-        "multimodal_bytes": q_multimodal_bytes,
-        "json_props_stats": q_json_props_stats,
-        "explode_token_positions": q_explode_token_positions,
-        "unpivot_lineitem_metrics": q_unpivot_lineitem_metrics,
-        "user_event_gaps": q_user_event_gaps,
-        # --- latest driver row r09 (freshest; bound at r12;
-        #     curate_pipeline_full promoted to the head) ---------------
-        "acctbal_quartiles": q_acctbal_quartiles,
-        "curate_pipeline": q_curate_pipeline,
-        "customers_with_orders": q_customers_with_orders,
-        "customers_without_orders": q_customers_without_orders,
-        "daily_event_metrics": q_daily_event_metrics,
-        "date_arith_orders": q_date_arith_orders,
-        "decontam_docs": q_decontam_docs,
-        "decontam_ngram": q_decontam_ngram,
-        "decontam_shuffle": q_decontam_shuffle,
-        "dsir_scores": q_dsir_scores,
-        "except_users": q_except_users,
-        "filter_project_part": q_filter_project_part,
-        "global_index": q_global_index,
-        "group_quota_cap": q_group_quota_cap,
-        "grouping_sets_revenue": q_grouping_sets_revenue,
-        "hash_split": q_hash_split,
-        "hourly_histogram": q_hourly_histogram,
-        "intersect_users": q_intersect_users,
-        "large_orders_having": q_large_orders_having,
-        "minhash_recall": q_minhash_recall,
-        "order_count_distribution": q_order_count_distribution,
-        "order_priority_late": q_order_priority_late,
-        "pii_scrub": q_pii_scrub,
-        "pricing_summary": q_pricing_summary,
-        "promo_revenue_share": q_promo_revenue_share,
-        "region_nation_revenue": q_region_nation_revenue,
-        "repetition_stats": q_repetition_stats,
-        "repetition_2gram_column": q_repetition_2gram_column,
-        "segment_repetition": q_segment_repetition,
-        "top_3gram_stats": q_top_3gram_stats,
-        "revenue_rank_by_nation": q_revenue_rank_by_nation,
-        "revenue_topk": q_revenue_topk,
-        "rich_customers_by_nation": q_rich_customers_by_nation,
-        "rollup_order_stats": q_rollup_order_stats,
-        "running_customer_revenue": q_running_customer_revenue,
-        "salted_join_skew": q_salted_join_skew,
-        "seq_packing": q_seq_packing,
-        "shipping_volume_nations": q_shipping_volume_nations,
-        "simhash_recall": q_simhash_recall,
-        "skew_orders": q_skew_orders,
-        "status_change_events": q_status_change_events,
-        "string_funcs_part": q_string_funcs_part,
-        "suppliers_above_avg": q_suppliers_above_avg,
-        "table_diff_docs": q_table_diff,
-        "top_transitions": q_top_transitions,
-        "topk_customers": q_topk_customers,
-        "union_distinct_users": q_union_distinct_users,
-        "user_first_last": q_user_first_last,
-        "user_traffic_fullouter": q_user_traffic_fullouter,
-        "validate_orders": q_validate_orders,
-        "weighted_mix": q_weighted_mix,
-        # --- rows-only by design (sketch/hash internals; each has a
-        #     sibling oracle-backed contract gate above) --------------
-        "user_count_hll": q_user_count_hll,
-        "value_quantiles_approx": q_value_quantiles_approx,
-        "minhash_neardup": q_minhash_neardup,
-        "simhash_groups": q_simhash_groups,
-        "simhash_neardup": q_simhash_neardup,
-        "embedding_topk_ivf": q_embedding_topk_ivf,
-        "embedding_topk_ivf_indexed": q_embedding_topk_ivf_indexed,
-    }
-    return q
-
-
-# BEGIN GATE_ORDER
-_GATE_ORDER = [
-    "pca_evr_bound",
-    "semdedup_keep",
-    "semdedup_pairs",
-    "semdedup_stats",
-    "temperature_mix",
-    "bigram_lm_ppl_column",
-    "embedding_covariance",
-    "embedding_pca_invariants",
-    "pii_scrub",
-    "pricing_summary",
-    "promo_revenue_share",
-    "region_nation_revenue",
-    "repetition_stats",
-    "repetition_2gram_column",
-    "segment_repetition",
-    "top_3gram_stats",
-    "revenue_rank_by_nation",
-    "revenue_topk",
-    "rich_customers_by_nation",
-    "rollup_order_stats",
-    "running_customer_revenue",
-    "salted_join_skew",
-    "seq_packing",
-    "shipping_volume_nations",
-    "simhash_recall",
-    "skew_orders",
-    "status_change_events",
-    "string_funcs_part",
-    "suppliers_above_avg",
-    "table_diff_docs",
-    "top_transitions",
-    "topk_customers",
-    "union_distinct_users",
-    "user_first_last",
-    "user_traffic_fullouter",
-    "validate_orders",
-    "weighted_mix",
-    "curate_pipeline_full",
-    "curate_pipeline_rep",
-    "semdedup_incremental",
-    "semdedup_pca_composed",
-    "token_budget",
-    "ppl_pruned",
-    "ppl_cms_bound",
-    "dsir_scheme_consistency",
-    "incremental_neardup_recall",
-    "hll_bounds",
-    "skew_safe_distinct",
-    "approx_quantile_bounds",
-    "ivf_recall",
-    "simhash_exactdup_consistency",
-    "pivot_priority_status",
-    "distinct_event_dates",
-    "latest_event_date",
-    "range_reagg_busiest",
-    "group_quota_cap_sparse",
-    "chunk_documents",
-    "span_dup_detect",
-    "span_dup_stats",
-    "span_strip",
-    "span_strip_incremental",
-    "bigram_lm_ppl",
-    "range_series_daily",
-    "range_hist_avg",
-    "range_reagg_routes",
-    "asof_last_purchase",
-    "range_join_error_window",
-    "tumbling_window_agg",
-    "sessionize",
-    "cube_event_stats",
-    "value_quantiles",
-    "dedup_exact",
-    "text_stats",
-    "lang_id",
-    "quality_scores",
-    "doc_fingerprint",
-    "ngram_jaccard",
-    "profile_orders",
-    "lineitem_stats",
-    "tfidf_top_terms",
-    "term_df",
-    "neardup_components",
-    "minhash_neardup",
-    "simhash_groups",
-    "simhash_neardup",
-    "embedding_topk_ivf",
-    "embedding_topk_ivf_indexed",
-    "neardup_route_auto",
-    "nb_scheme_consistency",
-    "banded_components_refinement",
-    "cms_heavy_hitters",
-    "corpus_shuffle",
-    "decontam_bloom",
-    "decontam_fuzzy",
-    "dsir_resample",
-    "fuzzy_contam_pairs",
-    "gopher_filter",
-    "gopher_stats",
-    "nb_lang_predict",
-    "ppl_buckets",
-    "ivf_pca_composed",
-    "multimodal_decode",
-    "pair_density_profile",
-    "embedding_quantize",
-    "span_strip_indexed",
-    "neardup_dedup_keep",
-    "embedding_topk",
-    "embedding_neardup",
-    "multimodal_bytes",
-    "json_props_stats",
-    "explode_token_positions",
-    "unpivot_lineitem_metrics",
-    "user_event_gaps",
-    "acctbal_quartiles",
-    "curate_pipeline",
-    "customers_with_orders",
-    "customers_without_orders",
-    "daily_event_metrics",
-    "date_arith_orders",
-    "decontam_docs",
-    "decontam_ngram",
-    "decontam_shuffle",
-    "dsir_scores",
-    "except_users",
-    "filter_project_part",
-    "global_index",
-    "group_quota_cap",
-    "grouping_sets_revenue",
-    "hash_split",
-    "hourly_histogram",
-    "intersect_users",
-    "large_orders_having",
-    "minhash_recall",
-    "order_count_distribution",
-    "order_priority_late",
-    "user_count_hll",
-    "value_quantiles_approx",
-]
-# END GATE_ORDER
-# ^ generated — DO NOT edit by hand. Regenerate at every round-open:
-#     python tools/gate_rotation.py --apply [--head g1,g2,...]
-# (--head = gates whose code/schema changed after their last driver
-# row; the ledger cannot see those — the round verdict names them.)
-# Ordering = verification priority: the driver samples a ~50-entry
-# prefix of queries(), so this list IS the gate-window rotation.
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = _query_registry()
-    # explicit raise, not assert: under `python -O` an assert is
-    # stripped and a registry-only gate would SILENTLY never be
-    # served to the driver (a stale _GATE_ORDER name at least dies
-    # on KeyError below; a missing one wouldn't).
-    if set(_GATE_ORDER) != set(q):
-        raise RuntimeError(
-            "stale _GATE_ORDER - rerun `python tools/gate_rotation.py "
-            f"--apply`; diff: {sorted(set(_GATE_ORDER) ^ set(q))}"
-        )
-    # Every callable is bound to the _acquire session boundary.
-    return {k: _with_session(q[k]) for k in _GATE_ORDER}
+    """Every module-level ``q_*`` function, in definition order, keyed
+    by its name without the prefix and bound to ``_acquire``."""
+    return {
+        name[2:]: _with_session(fn)
+        for name, fn in globals().items()
+        if name.startswith("q_")
+    }
 
 
 # Shared SQL fragments (keep in sync with operators/text.py).

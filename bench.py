@@ -26,7 +26,8 @@ per-query timings are ALSO emitted as small self-contained
 ``{"queries_rounded": ..., "part": i, "parts": n}`` lines just before
 the final summary line (each fits a tail window individually), and
 the full result object is written to ``BENCH_SELF.json`` next to this
-file. The final one-line summary is unchanged from r15.
+file. The final one-line summary is unchanged from r15. To compare
+a run with a recorded one, use ``tools/bench_compare.py --anchor``.
 
 Each query is timed end-to-end (plan build + execution + collect).
 A warmup query first absorbs one-time JVM/session startup so the
@@ -46,131 +47,20 @@ import __spark_entry__ as entry_mod
 from wroclaw_bike_stats_spark.session import get_spark
 
 
-# Contract/verification gates (COVERAGE.md "Round-4 error-bound
-# gates"): their Spark-side work deliberately INCLUDES the exact /
-# brute-force comparison that certifies an approximate operator
-# (capless shingle CTE pairs, O(n²) bit_count scans, full chained
-# pipeline oracles). They are audit cost, not engine throughput —
-# summed separately as gate_total so the regression comparison can be
-# made on engine work alone.
-GATE_QUERIES = frozenset(
-    {
-        "minhash_recall",
-        "simhash_recall",
-        "salted_join_skew",
-        "curate_pipeline",
-        "decontam_ngram",
-        "incremental_neardup_recall",
-        "hll_bounds",
-        "skew_safe_distinct",
-        "approx_quantile_bounds",
-        "ivf_recall",
-        "simhash_exactdup_consistency",
-        # r05: shuffle-route decontamination against a manufactured
-        # 1.2M-entry blocklist — route audit, not engine throughput.
-        "decontam_shuffle",
-        # r09: auto-vs-pinned-exact route equality — runs the default
-        # call AND the shared exact components to compare them.
-        "neardup_route_auto",
-        # r10 relabel (no code change): these five were always
-        # comparison gates — each runs BOTH the production route and
-        # an exact/alternate baseline to compare them (banded vs
-        # exact components; md5 vs xxhash DSIR and NB schemes; pruned
-        # and CMS LM vs the exact model) — i.e. the same
-        # deliberately-double-compute audit shape as the rest of this
-        # set. They were miscounted as engine throughput.
-        "banded_components_refinement",
-        "dsir_scheme_consistency",
-        "nb_scheme_consistency",
-        "ppl_pruned",
-        "ppl_cms_bound",
-        # r12: PCA fit-contract booleans + trace — an audit of the
-        # fit, not operator throughput (embedding_covariance, the
-        # actual corpus pass, stays in the engine bucket).
-        "embedding_pca_invariants",
-    }
-)
+def _marked(attr: str) -> frozenset[str]:
+    """Names of the ``queries()`` entries the entry module marks with
+    ``@_gate`` (attr ``gate``) or ``@_shared_warm`` (attr ``shared_warm``)."""
+    return frozenset(
+        name for name, fn in entry_mod.queries().items() if hasattr(fn, attr)
+    )
 
-# Queries whose in-bench timing is (by design) warmed by a shared
-# persisted intermediate built by a sibling query in the same run —
-# the explicit pair-graph/CC caches (__spark_entry__._ngram_pairs_shared,
-# _components_shared) and the plan-keyed shingle/fingerprint scratch
-# (operators/dedup._scratch_persist, operators/scratch.persist). The
-# TOTAL is genuine (each intermediate is built exactly once per run)
-# and correctness is order-independent (pinned in tests), but a
-# per-query value from this list is NOT a standalone cold latency.
-SHARED_WARM = frozenset(
-    {
-        "neardup_components",
-        "neardup_dedup_keep",
-        "ngram_jaccard",
-        "minhash_neardup",
-        "minhash_recall",
-        "incremental_neardup_recall",
-        "simhash_groups",
-        "simhash_neardup",
-        "simhash_recall",
-        "simhash_exactdup_consistency",
-        "neardup_route_auto",
-        # r10: shared persisted model/stage frames
-        # (__spark_entry__._shared_persisted): the DSIR fit, the
-        # %7==3 reference LM, the portable NB fit and the SemDeDup
-        # assignment+pair stages each build once per (session, sf)
-        # and warm every later consumer in the run
-        "dsir_scores",
-        "dsir_resample",
-        "dsir_scheme_consistency",
-        "bigram_lm_ppl",
-        "ppl_buckets",
-        "ppl_pruned",
-        "ppl_cms_bound",
-        "curate_pipeline_full",
-        "nb_lang_predict",
-        "nb_scheme_consistency",
-        "semdedup_pairs",
-        "semdedup_keep",
-        "semdedup_stats",
-        # r15: new shared persisted stages — the fuzzy contamination
-        # pair report (fuzzy_contam_pairs result = decontam_fuzzy drop
-        # list); the capless exact pair set / LM score frame / NB+DSIR
-        # score frames warm gates already in this list.
-        "decontam_fuzzy",
-        "fuzzy_contam_pairs",
-        # r15: the eval-set Bloom bitset (a standing asset — the
-        # operator docs always said "build it once outside the plan")
-        # is now built once per (session, sf) via _shared_value and
-        # fed through the bloom= hook, so reps 2+ skip its eager
-        # build jobs.
-        "decontam_bloom",
-        # r16: the arrow-family window_index standing asset (the span
-        # family's stored resident-corpus table) is built once per
-        # (session, sf); the probe site pass still runs per execution.
-        # Build cost reported in shared_build_sec.
-        "span_strip_indexed",
-        # r16: the banded (minhash) pair set is scratch-persisted —
-        # shared by this gate's subset/recall join and its CC arm, and
-        # plan-keyed-warm across reps like the rest of the pair-graph
-        # family.
-        "banded_components_refinement",
-        # r16: the %7==3 reference-LM COLLECTED broadcast assets
-        # (collect_lm_assets) are memoized per (session, sf) — the
-        # arrow scorer callers skip the per-plan model collect.
-        "bigram_lm_ppl_column",
-        # r16: the resident corpus's (centroids, assignment) standing
-        # asset is session-shared; the new-batch assignment + pair
-        # pass still runs per execution.
-        "semdedup_incremental",
-        # r12: the embedding moments memo (_shared_value) — rep 1
-        # would pay the corpus sweep and reps 2-3 the memo hit, so
-        # min-of-reps silently measured the memo anyway; listing them
-        # here makes the warm number POLICY, and the real corpus-pass
-        # cost is tracked where _cold() runs between reps
-        # (scale_bench's embedding_covariance / pca_project_corpus
-        # rows: 5.11 s / 10.89 s at sf100).
-        "embedding_covariance",
-        "embedding_pca_invariants",
-    }
-)
+
+# Contract/verification gates: audit cost, summed apart as gate_total
+# so the regression comparison can be made on engine work alone.
+GATE_QUERIES = _marked("gate")
+# Queries whose per-query number is warmed by a shared intermediate
+# built earlier in the run: not standalone cold latencies.
+SHARED_WARM = _marked("shared_warm")
 
 
 def main() -> None:
@@ -194,10 +84,9 @@ def main() -> None:
     # plus one pandas-UDF query so Python worker/Arrow startup is paid
     # here and not by whichever UDF query happens to run first, plus
     # one daily-metrics-family query so that family's one-time plan
-    # compile/JIT isn't billed to whichever family member the round's
-    # gate rotation happens to put first (r06: rotation moved the
-    # range queries to the front and their numbers absorbed ~0.2 s of
-    # family cold cost that daily_event_metrics used to pay).
+    # compile/JIT isn't billed to whichever family member runs first
+    # (r06: the range queries once ran first and their numbers
+    # absorbed ~0.2 s of family cold cost).
     for wname in ("pricing_summary", "simhash_groups", "daily_event_metrics"):
         try:
             queries[wname](spark, sf_dir).collect()
@@ -255,40 +144,6 @@ def main() -> None:
     # per-query maps or they get truncated away (BENCH_r03 was
     # parsed:null for exactly this reason).
     out = {"queries": timings}
-    # Anchor succession: r02 is the long baseline (the driver's 2x gate
-    # has no external one, so r02 IS it) but covers only the original
-    # 68 queries; later closing anchors cover the full set so new gates
-    # get regression tracking too. Adding a round = one tuple here.
-    for env, path, key in (
-        ("SPARK_GRAFT_BENCH_ANCHOR", "/root/repo/BENCH_r02.json", "vs_r02"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R04",
-         "/root/repo/BENCH_ANCHOR_r04.json", "vs_r04"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R05",
-         "/root/repo/BENCH_ANCHOR_r05.json", "vs_r05"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R06",
-         "/root/repo/BENCH_ANCHOR_r06.json", "vs_r06"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R07",
-         "/root/repo/BENCH_ANCHOR_r07.json", "vs_r07"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R09",
-         "/root/repo/BENCH_ANCHOR_r09.json", "vs_r09"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R10",
-         "/root/repo/BENCH_ANCHOR_r10.json", "vs_r10"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R11",
-         "/root/repo/BENCH_ANCHOR_r11.json", "vs_r11"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R12",
-         "/root/repo/BENCH_ANCHOR_r12.json", "vs_r12"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R13",
-         "/root/repo/BENCH_ANCHOR_r13.json", "vs_r13"),
-        ("SPARK_GRAFT_BENCH_ANCHOR_R15",
-         "/root/repo/BENCH_ANCHOR_r15.json", "vs_r15"),
-    ):
-        anchor = _load_anchor(os.environ.get(env, path))
-        if anchor:
-            out[key] = {
-                name: round(t / anchor[name], 2)
-                for name, t in timings.items()
-                if name in anchor and anchor[name] > 0
-            }
     out["shared_warm"] = sorted(SHARED_WARM & set(timings))
     out["shared_build_sec"] = shared_build
     out["shared_build_total"] = round(sum(shared_build.values()), 3)
@@ -352,46 +207,6 @@ def main() -> None:
             }
         )
     )
-
-
-def _load_anchor(path: str) -> dict[str, float] | None:
-    """Per-query timings from a recorded bench round, used as the
-    regression anchor (BENCH_r02 was the first real bench; the driver's
-    2x gate has no external baseline, so r02 IS the baseline). Driver
-    bench files wrap the JSON line in a 'tail' string — unwrap it."""
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-        if "queries" in doc:
-            return doc["queries"]
-        tail = doc.get("tail", "")
-        # Round-4+ bench output leads with {"queries": ...} and ends
-        # with a short {"metric": ...} summary line that has NO
-        # queries map — prefer the full object. r16 output additionally
-        # carries small {"queries_rounded": ..., "part": i} lines;
-        # assemble those when the long line was truncated away. Finally
-        # fall back to the old (pre-r4) metric-first format.
-        rounded: dict[str, float] = {}
-        for marker in ('{"queries":', '{"metric"'):
-            start = tail.find(marker)
-            if start >= 0:
-                try:
-                    obj = json.loads(tail[start:].splitlines()[0])
-                except ValueError:
-                    continue
-                if "queries" in obj:
-                    return obj["queries"]
-        for line in tail.splitlines():
-            line = line.strip()
-            if not line.startswith('{"queries_rounded"'):
-                continue
-            try:
-                rounded.update(json.loads(line)["queries_rounded"])
-            except Exception:  # noqa: BLE001 - a truncated first line
-                continue
-        return rounded or None
-    except Exception:
-        return None
 
 
 if __name__ == "__main__":

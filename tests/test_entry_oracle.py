@@ -58,6 +58,19 @@ def test_every_oracle_key_has_a_query():
     assert set(ORACLES) <= set(QUERIES)
 
 
+def test_bench_sets_derive_from_query_marks():
+    """bench.py's gate and shared-warm sets come from the ``@_gate`` /
+    ``@_shared_warm`` marks on the ``q_*`` functions; a wrapper that
+    dropped the marks would silently make gate_total 0."""
+    import bench
+
+    for marked in (bench.GATE_QUERIES, bench.SHARED_WARM):
+        assert marked and marked < set(QUERIES)
+    for name, fn in QUERIES.items():
+        q = getattr(entry_mod, f"q_{name}")
+        assert (fn.__name__, fn.__doc__) == (q.__name__, q.__doc__)
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
     spark_df = QUERIES[name](spark, SF_DIR).toPandas()

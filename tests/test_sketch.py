@@ -82,3 +82,32 @@ def test_deterministic(spark, corpus):
     s1 = sorted(map(tuple, SK.cms_build(corpus).collect()))
     s2 = sorted(map(tuple, SK.cms_build(corpus).collect()))
     assert s1 == s2
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["normal", "empty"])
+def test_dense_local_equals_dense(spark, corpus, empty):
+    """``cms_dense_local`` (one bounded collect, LocalRelation) serves the
+    same row, type and (depth, width) metadata as the lazy ``cms_dense``
+    — the ppl_cms_bound gate's certified bound scores through it."""
+    docs = corpus.filter(F.lit(False)) if empty else corpus
+    sk = SK.cms_build(docs, width=64, depth=3)
+    lazy, local = SK.cms_dense(sk), SK.cms_dense_local(sk)
+    # same map<bigint,array<bigint>> type; only nullability differs
+    # (a pandas-built LocalRelation is nullable)
+    assert lazy.schema.simpleString() == local.schema.simpleString()
+    assert lazy.schema["_cms"].metadata == local.schema["_cms"].metadata == {
+        "cms_depth": 3,
+        "cms_width": 64,
+    }
+    got = local.collect()
+    assert got == lazy.collect()
+    cms = got[0]["_cms"]
+    assert sorted(cms) == [0, 1, 2] and all(len(a) == 64 for a in cms.values())
+    assert (sum(cms[0]) == 0) == empty
+
+
+def test_dense_forms_need_sketch_metadata(spark):
+    bare = spark.createDataFrame([(0, 1, 5)], "row long, bucket long, cnt long")
+    for dense in (SK.cms_dense, SK.cms_dense_local):
+        with pytest.raises(ValueError, match="metadata"):
+            dense(bare)

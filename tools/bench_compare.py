@@ -15,6 +15,11 @@ import json
 
 
 def load_queries(path: str) -> dict[str, float]:
+    """Per-query seconds from a ``bench.py`` result object, or from a
+    recorded run whose ``tail`` holds the lines the bench printed. When
+    the tail cut off the long ``{"queries": ...}`` line, the small
+    ``{"queries_rounded": ...}`` chunk lines printed after it are
+    assembled instead."""
     with open(path) as f:
         text = f.read()
     try:
@@ -24,12 +29,18 @@ def load_queries(path: str) -> dict[str, float]:
     if "queries" in doc:
         return doc["queries"]
     tail = doc.get("tail", "")
-    for marker in ('{"queries"', '{"metric"'):
+    for marker in ('{"queries":', '{"metric"'):
         start = tail.find(marker)
         if start >= 0:
             obj = json.loads(tail[start:].splitlines()[0])
             if "queries" in obj:
                 return obj["queries"]
+    rounded: dict[str, float] = {}
+    for line in tail.splitlines():
+        if line.startswith('{"queries_rounded"'):
+            rounded.update(json.loads(line)["queries_rounded"])
+    if rounded:
+        return rounded
     raise ValueError(f"no queries map in {path}")
 
 

@@ -13,6 +13,7 @@ relies on AQE to right-size.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import SparkSession
@@ -31,6 +32,9 @@ def get_spark(
     below apply.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Parsed before the (process-global) builder is touched, so a bad
+    # value fails without leaving half a config behind.
+    env_conf = _env_conf()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -77,10 +81,24 @@ def get_spark(
     # $SPARK_GRAFT_EXTRA_CONF is applied LAST, so a cluster deployment
     # (or an A/B harness) can override any default above without code
     # edits — the "scale-dependent settings stay parameterised" rule.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        import json
-
-        for k, v in json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
+    for k, v in env_conf.items():
+        builder = builder.config(k, str(v))
     return builder.getOrCreate()
+
+
+def _env_conf() -> dict:
+    """``$SPARK_GRAFT_EXTRA_CONF`` parsed: a JSON object of spark confs
+    ({} when unset or empty)."""
+    text = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
+    if not text:
+        return {}
+    try:
+        conf = json.loads(text)
+    except json.JSONDecodeError as e:
+        raise ValueError(f"SPARK_GRAFT_EXTRA_CONF is not valid JSON: {e}") from e
+    if not isinstance(conf, dict):
+        raise ValueError(
+            "SPARK_GRAFT_EXTRA_CONF must be a JSON object of spark confs, "
+            f"got {type(conf).__name__}"
+        )
+    return conf
