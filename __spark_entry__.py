@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from wroclaw_bike_stats_spark.operators import dedup as D
 from wroclaw_bike_stats_spark.operators import fanout as FAN
+from wroclaw_bike_stats_spark.operators import scratch
 from wroclaw_bike_stats_spark.operators import similarity as SIM
 from wroclaw_bike_stats_spark.operators import text as T
 
@@ -1096,175 +1097,45 @@ def q_value_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The exact near-dup pair graph feeds three gate queries
-# (ngram_jaccard itself, components, dedup-keep). Rebuilding
-# shingles+join per consumer tripled the bench tail — persist it once
-# per (session, sf_dir) and share. Keyed by applicationId (stable per
-# SparkContext — id(spark) can alias after GC) and evicted when a
-# different (session, sf) is requested, so at most ONE pair graph
-# stays pinned; release_shared() drops it entirely.
-_PAIR_GRAPH_CACHE: dict = {}
-
-
 def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIR_GRAPH_CACHE.get(key)
-    if df is None:
-        # Evict only STALE graphs (other session/sf). Not
-        # release_shared(): that would also drop the warm scratch
-        # (shingle table etc.) the rebuild below is about to reuse
-        # through the plan-keyed cache.
-        for k in [k for k in _PAIR_GRAPH_CACHE if k != key]:
-            try:
-                _PAIR_GRAPH_CACHE.pop(k).unpersist()
-            except Exception:  # noqa: BLE001
-                pass
-        import time as _time
-
-        t0 = _time.perf_counter()
-        docs = _t(spark, sf_dir, "documents")
-        df = D.ngram_jaccard_pairs(
-            docs, n=3, threshold=0.5, df_cap=100
-        ).persist()
-        # materialize + time, same accounting as _shared_persisted
-        try:
-            df.write.format("noop").mode("overwrite").save()
-        except Exception:  # noqa: BLE001 - consumers still fill lazily
-            pass
-        _SHARED_BUILD_SEC["ngram_pair_graph"] = (
-            _SHARED_BUILD_SEC.get("ngram_pair_graph", 0.0)
-            + _time.perf_counter()
-            - t0
-        )
-        _PAIR_GRAPH_CACHE[key] = df
-    return df
-
-
-# Generic session-shared persisted intermediates (round 10 — the
-# pair-graph cache's keying/eviction discipline, factored so every
-# shared model/stage uses ONE mechanism): (appId, sf_dir, name) →
-# DataFrame or tuple of DataFrames, all persisted. Shared by the
-# DSIR model, the %7==3 reference LM, the portable NB model and the
-# SemDeDup assignment+pair stages; release_shared() drops them all.
-_SHARED_FRAMES: dict = {}
-
-# r16 (bench-accounting honesty, VERDICT task 6): wall seconds spent
-# building each shared asset — plan construction PLUS the eager
-# materialization below. One-time builds land inside rep 1 of their
-# first consumer, which min-of-reps discards, so without this record
-# the build cost appears in NO reported number. The bench emits it as
-# "shared_build_sec"; cleared with everything else at release_shared().
-_SHARED_BUILD_SEC: dict = {}
+    """The exact near-dup pair graph (df_cap=100). It feeds three gate
+    queries (ngram_jaccard itself, components, dedup-keep), so it is a
+    shared asset built once per (session, corpus version)."""
+    return scratch.shared_frame(
+        spark, sf_dir, "ngram_pair_graph",
+        lambda: D.ngram_jaccard_pairs(
+            _t(spark, sf_dir, "documents"), n=3, threshold=0.5, df_cap=100
+        ),
+    )
 
 
 def shared_build_sec() -> dict:
-    """name → measured build seconds for every shared asset built so
-    far in this session (see ``_SHARED_BUILD_SEC``)."""
-    return {k: round(v, 3) for k, v in _SHARED_BUILD_SEC.items()}
-
-
-def _shared_persisted(spark: SparkSession, sf_dir: str, name: str, build):
-    import time as _time
-
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    got = _SHARED_FRAMES.get(key)
-    if got is None:
-        # evict only STALE instances of this name (other session/sf)
-        for k in [k for k in _SHARED_FRAMES if k[2] == name and k != key]:
-            old = _SHARED_FRAMES.pop(k)
-            for df in old if isinstance(old, tuple) else (old,):
-                try:
-                    df.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
-        t0 = _time.perf_counter()
-        got = build()
-        for df in got if isinstance(got, tuple) else (got,):
-            df.persist()
-            # Materialize NOW (noop sink: every column, result
-            # discarded) so the asset's one-time cost is attributable
-            # to the build — it was always paid at first-consumer time
-            # anyway (persist fills on first action); timing it here
-            # makes it reportable instead of vanishing into a
-            # discarded rep-1 number.
-            try:
-                df.write.format("noop").mode("overwrite").save()
-            except Exception:  # noqa: BLE001 - consumers still fill lazily
-                pass
-        _SHARED_BUILD_SEC[name] = (
-            _SHARED_BUILD_SEC.get(name, 0.0) + _time.perf_counter() - t0
-        )
-        _SHARED_FRAMES[key] = got
-    return got
-
-
-_SHARED_VALUES: dict = {}
-
-
-def _shared_value(spark: SparkSession, sf_dir: str, name: str, build):
-    """The `_shared_persisted` pattern for plain (non-DataFrame)
-    results — e.g. the embedding moments tuple consumed by both PCA
-    gates: the corpus-wide pass runs once per (session, sf), the
-    constant-size result is memoized, and `release_shared` drops it
-    with everything else."""
-    import time as _time
-
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _SHARED_VALUES:
-        for k in [k for k in _SHARED_VALUES if k[2] == name and k != key]:
-            _SHARED_VALUES.pop(k)
-        t0 = _time.perf_counter()
-        _SHARED_VALUES[key] = build()
-        _SHARED_BUILD_SEC[name] = (
-            _SHARED_BUILD_SEC.get(name, 0.0) + _time.perf_counter() - t0
-        )
-    return _SHARED_VALUES[key]
+    """name → measured build seconds (plan construction plus eager
+    materialization) of every shared asset built since the last
+    ``release_shared()``. One-time builds land inside rep 1 of their
+    first consumer, which min-of-reps discards, so without this record
+    the build cost appears in no reported number."""
+    return scratch.build_sec()
 
 
 def release_shared() -> None:
-    """Unpersist every session-shared / scratch intermediate (the
-    near-dup pair graph, the shared model/stage frames and dedup
-    shingle/candidate scratch). Safe to call anytime — consumers
-    rebuild lazily on next use. A resident service (or the bench,
-    after its run) calls this so no persisted RDDs outlive their
-    consumers."""
-    shared: list = list(_PAIR_GRAPH_CACHE.values())
-    for got in _SHARED_FRAMES.values():
-        shared.extend(got if isinstance(got, tuple) else (got,))
-    for df in shared:
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 - session may already be gone
-            pass
-    _PAIR_GRAPH_CACHE.clear()
-    _SHARED_FRAMES.clear()
-    _SHARED_VALUES.clear()
-    _SHARED_BUILD_SEC.clear()
-    # CC results are checkpoint-backed: dropping the references lets
-    # ContextCleaner reclaim the blocks (DataFrame.unpersist would be
-    # a no-op for them — see operators/scratch.py).
-    _CC_CACHE.clear()
-    D.release_scratch()
-
-
-# The CC fixpoint over the shared pair graph also feeds two gates;
-# its result is checkpoint-backed (already materialized), so sharing
-# it skips a full re-run of the iteration. Cleared with the pair
-# graph at release_shared().
-_CC_CACHE: dict = {}
+    """Drop every shared asset and scratch intermediate (see
+    operators/scratch.py). Safe to call between queries: consumers
+    rebuild on next use. A resident service (or the bench, after its
+    run) calls this so no persisted RDDs outlive their consumers."""
+    scratch.release()
 
 
 def _components_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CC fixpoint over the shared pair graph, shared by two gates.
+    Its result is checkpoint-backed (already materialized), so sharing
+    it skips a full re-run of the iteration."""
     from wroclaw_bike_stats_spark.operators.components import connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CC_CACHE.get(key)
-    if df is None:
-        for k in [k for k in _CC_CACHE if k != key]:
-            _CC_CACHE.pop(k)  # checkpoint blocks go to ContextCleaner
-        df = connected_components(_ngram_pairs_shared(spark, sf_dir))
-        _CC_CACHE[key] = df
-    return df
+    pairs = _ngram_pairs_shared(spark, sf_dir)
+    return scratch.shared_value(
+        spark, sf_dir, "components", lambda: connected_components(pairs)
+    )
 
 
 @_shared_warm("shared components (_components_shared)")
@@ -1309,8 +1180,6 @@ def q_banded_components_refinement(spark: SparkSession, sf_dir: str) -> DataFram
     from wroclaw_bike_stats_spark.operators.components import (
         connected_components,
     )
-
-    from wroclaw_bike_stats_spark.operators import scratch
 
     docs = _t(spark, sf_dir, "documents")
     exact = _ngram_pairs_shared(spark, sf_dir).select(
@@ -1561,7 +1430,7 @@ def _ngram_pairs_capless_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact baseline of BOTH LSH recall gates (minhash_recall,
     incremental_neardup_recall), each of which previously re-ran the
     full inverted-index self-join."""
-    return _shared_persisted(
+    return scratch.shared_frame(
         spark, sf_dir, "exact_pairs_capless",
         lambda: D.ngram_jaccard_pairs(
             _t(spark, sf_dir, "documents"), n=3, threshold=0.5
@@ -1584,8 +1453,6 @@ def q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts non-vacuity (an empty pair set would make equality
     trivially true).
     """
-    from wroclaw_bike_stats_spark.operators import scratch
-
     docs = _t(spark, sf_dir, "documents")
     # One fingerprint pass, shared by the brute-force and banded sides
     # (scratch-persisted: the later simhash_* gates hit the same
@@ -1787,7 +1654,7 @@ def _bloom_shared(spark: SparkSession, sf_dir: str) -> tuple:
         bitset, m, k = build_ngram_bloom(None, "text", 5, grams=ev)
         return bitset.tobytes(), m, k
 
-    return _shared_value(spark, sf_dir, "bloom_n5", build)
+    return scratch.shared_value(spark, sf_dir, "bloom_n5", build)
 
 
 @_shared_warm("shared fuzzy contamination pairs (_fuzzy_pairs_shared)")
@@ -1826,7 +1693,7 @@ def _fuzzy_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     eval_set = docs.filter(F.col("doc_id") % 50 == 0)
-    return _shared_persisted(
+    return scratch.shared_frame(
         spark, sf_dir, "fuzzy_pairs",
         lambda: fuzzy_contaminated_pairs(
             docs, eval_set, n=3, threshold=0.5
@@ -2013,7 +1880,7 @@ def _dsir_model(spark: SparkSession, sf_dir: str):
     from wroclaw_bike_stats_spark.operators.dsir import dsir_logratio
 
     docs = _t(spark, sf_dir, "documents")
-    model = _shared_persisted(
+    model = scratch.shared_frame(
         spark, sf_dir, "dsir_model",
         lambda: dsir_logratio(
             docs.filter(F.col("doc_id") % 9 == 1), docs, portable_hash=True
@@ -2030,7 +1897,7 @@ def _ref_lm_shared(spark: SparkSession, sf_dir: str):
     from wroclaw_bike_stats_spark.operators.text import train_bigram_lm
 
     docs = _t(spark, sf_dir, "documents")
-    return _shared_persisted(
+    return scratch.shared_frame(
         spark, sf_dir, "ref_lm",
         lambda: train_bigram_lm(docs.filter(F.col("doc_id") % 7 == 3)),
     )
@@ -2049,7 +1916,7 @@ def _ref_lm_assets_shared(spark: SparkSession, sf_dir: str):
     from wroclaw_bike_stats_spark.operators.text import collect_lm_assets
 
     uni, bi = _ref_lm_shared(spark, sf_dir)
-    return _shared_value(
+    return scratch.shared_value(
         spark, sf_dir, "ref_lm_assets",
         lambda: collect_lm_assets(spark, uni, bi),
     )
@@ -2085,7 +1952,7 @@ def _dsir_scores_shared(spark: SparkSession, sf_dir: str, portable: bool):
         return dsir_scores(docs, model, portable_hash=portable)
 
     name = "dsir_scores_md5" if portable else "dsir_scores_xx"
-    return docs, _shared_persisted(spark, sf_dir, name, build)
+    return docs, scratch.shared_frame(spark, sf_dir, name, build)
 
 
 @_shared_warm("shared DSIR fit and score frame (_dsir_scores_shared)")
@@ -2238,7 +2105,7 @@ def q_nb_scheme_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profiled 2 × ~0.4 s single-task jobs). The PREDICT pass below —
     # the production-route corpus work this gate certifies — still
     # runs per execution.
-    w, p = _shared_persisted(
+    w, p = scratch.shared_frame(
         spark, sf_dir, "nb_model_xx",
         lambda: nb_train(
             labeled, _NB_CLASSES, label_col="lang", portable_hash=False
@@ -2284,7 +2151,7 @@ def _lm_scores_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     uni, bi = _ref_lm_shared(spark, sf_dir)
-    return _shared_persisted(
+    return scratch.shared_frame(
         spark, sf_dir, "ref_lm_scores",
         lambda: bigram_lm_score(docs, uni, bi, alpha=0.1),
     )
@@ -2301,7 +2168,7 @@ def _nb_model_shared(spark: SparkSession, sf_dir: str):
     from wroclaw_bike_stats_spark.operators.classifier import nb_train
 
     docs = _t(spark, sf_dir, "documents")
-    return _shared_persisted(
+    return scratch.shared_frame(
         spark, sf_dir, "nb_model",
         lambda: nb_train(
             docs.filter(F.col("doc_id") % 3 != 0), _NB_CLASSES,
@@ -2319,14 +2186,13 @@ def _nb_pred_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wroclaw_bike_stats_spark.operators.classifier import nb_predict
 
     docs = _t(spark, sf_dir, "documents")
-
-    def build():
-        weights, priors = _nb_model_shared(spark, sf_dir)
-        return nb_predict(
+    weights, priors = _nb_model_shared(spark, sf_dir)
+    return scratch.shared_frame(
+        spark, sf_dir, "nb_pred_md5",
+        lambda: nb_predict(
             docs, weights, priors, _NB_CLASSES, portable_hash=True
-        )
-
-    return _shared_persisted(spark, sf_dir, "nb_pred_md5", build)
+        ),
+    )
 
 
 @_shared_warm("shared NB fit and predictions (_nb_pred_shared)")
@@ -2471,12 +2337,12 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_moments_shared(spark: SparkSession, sf_dir: str) -> tuple:
     """The (n, mean, cov) moments of the embeddings table — the one
     corpus-wide pass both PCA gates consume; computed once per
-    (session, sf) via the `_shared_value` memo."""
+    (session, corpus version) in the shared-asset store."""
     from wroclaw_bike_stats_spark.operators.embedding_stats import (
         embedding_moments,
     )
 
-    return _shared_value(
+    return scratch.shared_value(
         spark, sf_dir, "emb_moments",
         lambda: embedding_moments(_t(spark, sf_dir, "embeddings")),
     )
@@ -2632,77 +2498,39 @@ def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-def _cached_ivf_index(sf_dir: str, tag: str, assigned) -> str:
-    """Materialize (once per corpus VERSION) and return the path of a
-    centroid-partitioned IVF index for ``assigned``. The cache key
-    embeds a fingerprint of the source parquet (size + mtime), so
-    rewriting the corpus at the same path invalidates the index
-    instead of serving stale postings; stale fingerprints of the same
-    (corpus, tag) are pruned on rebuild. ``tag`` separates index
-    FAMILIES over the same corpus (raw-space vs PCA-projected)."""
-    import os
-
+def _ivf_index_shared(
+    spark: SparkSession, sf_dir: str, name: str, assigned
+) -> str:
+    """Path of the centroid-partitioned IVF index of ``assigned``,
+    written once per (session, corpus version) under the shared-asset
+    store's root; ``name`` separates index families over one corpus
+    (raw-space vs PCA-projected)."""
     from wroclaw_bike_stats_spark.operators.similarity import ivf_write_index
 
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        fingerprint = f"{st.st_size}-{st.st_mtime_ns}"
-    except OSError:
-        fingerprint = "nosrc"
-    # '.' joins the family tag so one family's prune prefix can never
-    # match another's directories ("sf0.01.raw-" vs "sf0.01.pca-")
-    stem = f"{sf_name}.{tag or 'raw'}"
-    cache_root = "/root/repo/.ivf_index_cache"
-    index_path = os.path.join(cache_root, f"{stem}-{fingerprint}")
-    if os.path.isdir(cache_root):
-        # One-time sweep of pre-r14 cache dirs: the stem used to be
-        # '{sf_name}-{fp}' (no family tag), which the tagged prune
-        # prefixes below never match — they'd accumulate as orphans.
-        # New stems always contain '.', so '{sf_name}-' only matches
-        # legacy layouts.
-        import shutil
+    def build():
+        path = scratch.asset_dir(name)
+        ivf_write_index(assigned, path)
+        return path
 
-        for d in os.listdir(cache_root):
-            if d.startswith(f"{sf_name}-"):
-                shutil.rmtree(os.path.join(cache_root, d), ignore_errors=True)
-    if not os.path.isdir(index_path):
-        # Prune stale fingerprints of the same corpus before building
-        # the new index — each rewrite would otherwise leave its
-        # unreachable predecessor on disk forever.
-        import shutil
-
-        if os.path.isdir(cache_root):
-            for d in os.listdir(cache_root):
-                if d.startswith(f"{stem}-") and d != f"{stem}-{fingerprint}":
-                    shutil.rmtree(
-                        os.path.join(cache_root, d), ignore_errors=True
-                    )
-        ivf_write_index(assigned, index_path)
-    return index_path
+    return scratch.shared_value(spark, sf_dir, name, build)
 
 
 def q_embedding_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k over a MATERIALIZED centroid-partitioned index — the
     true 100 TB read path: the probe set becomes a literal IN-list the
     scan prunes partitions with (PartitionFilters asserted in
-    tests/test_dedup_similarity.py). The index is built once per
-    corpus VERSION and reused, as a resident cluster would: the cache
-    path embeds a fingerprint of the source parquet (size + mtime), so
-    rewriting the corpus at the same path invalidates the index
+    tests/test_dedup_similarity.py). The index is a shared asset,
+    built once per corpus VERSION and reused as a resident cluster
+    would: rewriting the corpus at the same path invalidates it
     instead of serving stale postings."""
-    import os
-
     from wroclaw_bike_stats_spark.operators.similarity import (
         cosine_topk_ivf_indexed,
         ivf_assign,
-        ivf_write_index,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     centroids, assigned = ivf_assign(emb, num_centroids=16)
-    index_path = _cached_ivf_index(sf_dir, "", assigned)
+    index_path = _ivf_index_shared(spark, sf_dir, "ivf_index", assigned)
     queries = emb.filter(F.col("vec_id") < 5)
     # ORACLE-BACKED since r13: identical contract to q_embedding_
     # topk_ivf (same deterministic centroids/probes/ranking — the
@@ -2721,8 +2549,8 @@ def q_ivf_pca_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector, then approximate top-k through the MATERIALIZED
     centroid-partitioned IVF index built over the 8-dim projections —
     the physical shape a 1000-executor ANN service would run (probe
-    list becomes a literal partition filter; index cached per corpus
-    version under the '.pca' family tag). Fully deterministic
+    list becomes a literal partition filter; index shared per corpus
+    version as ``ivf_index_pca``). Fully deterministic
     (16 smallest-id centroids, cosine assignment/probe with id
     tie-breaks, rank on 6-dp-rounded sim), so the oracle replays the
     ENTIRE composition: independent duckdb+numpy PCA refit as
@@ -2745,7 +2573,7 @@ def q_ivf_pca_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "pvec"
     )
     centroids, assigned = ivf_assign(proj, num_centroids=16, vec_col="pvec")
-    index_path = _cached_ivf_index(sf_dir, "pca", assigned)
+    index_path = _ivf_index_shared(spark, sf_dir, "ivf_index_pca", assigned)
     queries = proj.filter(F.col("vec_id") < 5)
     return cosine_topk_ivf_indexed(
         spark,
@@ -2838,13 +2666,13 @@ def _sem_shared(spark: SparkSession, sf_dir: str):
         # persist BEFORE semdedup_pairs: its default-on pre-flight
         # runs two bounded jobs against the assignment eagerly — un-
         # persisted, each re-ran the full assignment matmul from the
-        # parquet (r15; _shared_persisted's own persist() below is a
+        # parquet (r15; shared_frame's own persist() below is a
         # no-op on the already-marked frame)
         assigned.persist()
         pairs = semdedup_pairs(emb, threshold=0.4, assigned=assigned)
         return centroids, assigned, pairs
 
-    return (emb,) + tuple(_shared_persisted(spark, sf_dir, "semdedup", build))
+    return (emb,) + tuple(scratch.shared_frame(spark, sf_dir, "semdedup", build))
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2954,7 +2782,7 @@ def q_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it (build cost in shared_build_sec); the NEW-batch assignment +
     # cross pair pass — the actual per-ingest work — runs per
     # execution as before.
-    centroids, old_assigned = _shared_persisted(
+    centroids, old_assigned = scratch.shared_frame(
         spark, sf_dir, "semdedup_incr_old",
         lambda: semdedup_assign(old, num_clusters=8),
     )
@@ -3596,7 +3424,7 @@ def q_span_strip_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # standing asset; the strip's probe site pass over the corpus
     # still runs in full every execution. Marked @_shared_warm;
     # build cost reported in shared_build_sec.
-    idx = _shared_persisted(
+    idx = scratch.shared_frame(
         spark, sf_dir, "span_index_arrow",
         lambda: window_index(docs, k=13, site_route="arrow"),
     )
@@ -3720,7 +3548,7 @@ def q_ppl_cms_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comparison below are unchanged and still run per execution.
     from wroclaw_bike_stats_spark.operators.sketch import cms_dense_local
 
-    sk = _shared_value(
+    sk = scratch.shared_value(
         spark, sf_dir, "cms_ref_dense",
         lambda: cms_dense_local(
             cms_bigram_sketch(ref, depth=4, width=16384)

@@ -119,9 +119,9 @@ def main() -> None:
             timings[name] = round(best, 3)
 
     # Shared-asset build accounting (r16, VERDICT task 6): the entry
-    # times every `_shared_persisted` / `_shared_value` build (plan
+    # times every shared-asset build in operators/scratch.py (plan
     # construction + eager materialization). Collected BEFORE
-    # release_shared() clears the registry.
+    # release_shared() clears the record.
     try:
         shared_build = dict(entry_mod.shared_build_sec())
     except Exception:  # noqa: BLE001 - accounting must not kill the bench

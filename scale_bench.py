@@ -1228,16 +1228,10 @@ RATIO_KEY = {
 
 
 def _cold() -> None:
+    # drops the shared assets and the scratch pool, where
+    # persist_stages rows (curate_full_corpus) register survivor frames
     try:
         entry_mod.release_shared()
-    except Exception:  # noqa: BLE001
-        pass
-    # persist_stages rows (curate_full_corpus) register survivor
-    # frames with the scratch pool — a cold run must not inherit them
-    try:
-        from wroclaw_bike_stats_spark.operators import scratch
-
-        scratch.release()
     except Exception:  # noqa: BLE001
         pass
 

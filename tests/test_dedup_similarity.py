@@ -352,34 +352,28 @@ def test_ivf_indexed_prunes_partitions_and_matches_inline(spark, emb, tmp_path):
 
 
 def test_ivf_index_cache_invalidated_by_corpus_rewrite(spark, tmp_path):
-    """The gate's materialized-index cache keys on a corpus fingerprint
-    (size + mtime): rewriting embeddings.parquet at the same path must
-    build a NEW index and prune the stale one, never serve old
-    postings."""
+    """The gate's materialized index is a shared asset keyed on a corpus
+    fingerprint (size + mtime): rewriting embeddings.parquet at the same
+    path must build a NEW index under the store's root and delete the
+    stale one, never serve old postings."""
     import os
     import shutil
     import time
 
     import __spark_entry__ as entry_mod
+    from wroclaw_bike_stats_spark.operators import scratch
 
     sf_dir = tmp_path / "sfivf"
     sf_dir.mkdir()
     src = "/root/testdata/sf0.001/embeddings.parquet"
     dst = str(sf_dir / "embeddings.parquet")
     shutil.copy(src, dst)
-
-    cache_root = "/root/repo/.ivf_index_cache"
-    # r14: cache keys are family-tagged — "<sf>.raw-<fp>" for the
-    # raw-space index, "<sf>.pca-<fp>" for the projected one — so one
-    # family's prune prefix can never match the other's directories
-    prefix = os.path.basename(str(sf_dir)) + ".raw-"
+    gate = entry_mod.queries()["embedding_topk_ivf_indexed"]
 
     def _index_dirs():
-        if not os.path.isdir(cache_root):
-            return set()
-        return {d for d in os.listdir(cache_root) if d.startswith(prefix)}
+        return {d for d in os.listdir(scratch._ROOT) if d.startswith("ivf_index-")}
 
-    entry_mod.queries()["embedding_topk_ivf_indexed"](spark, str(sf_dir)).collect()
+    before = sorted(map(tuple, gate(spark, str(sf_dir)).collect()))
     first = _index_dirs()
     assert len(first) == 1
 
@@ -388,23 +382,15 @@ def test_ivf_index_cache_invalidated_by_corpus_rewrite(spark, tmp_path):
     time.sleep(0.01)
     shutil.copy(src, dst)
     os.utime(dst)
-    entry_mod.queries()["embedding_topk_ivf_indexed"](spark, str(sf_dir)).collect()
+    after = sorted(map(tuple, gate(spark, str(sf_dir)).collect()))
     second = _index_dirs()
     assert len(second) == 1
     assert first != second, "stale index served after corpus rewrite"
+    assert after == before
 
-    # r15 (r14 ADVICE): pre-r14 untagged dirs ('<sf>-<fp>', no family
-    # tag) are never matched by the tagged prune prefixes — the cache
-    # path must sweep them as legacy orphans on any call.
-    legacy = os.path.join(
-        cache_root, os.path.basename(str(sf_dir)) + "-123-456"
-    )
-    os.makedirs(legacy, exist_ok=True)
-    entry_mod.queries()["embedding_topk_ivf_indexed"](spark, str(sf_dir)).collect()
-    assert not os.path.isdir(legacy), "legacy untagged cache dir not pruned"
-
-    for d in first | second:  # cleanup
-        shutil.rmtree(os.path.join(cache_root, d), ignore_errors=True)
+    root = scratch._ROOT
+    entry_mod.release_shared()
+    assert not os.path.exists(root)
 
 
 def test_hyperplane_lsh_finds_near_identical_vectors(spark, emb):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,8 +16,20 @@ from wroclaw_bike_stats_spark import ingest
 from wroclaw_bike_stats_spark.cli import main as cli_main
 from wroclaw_bike_stats_spark.cli import read_table
 
+sys.path.append(
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+)
+import bikegen  # noqa: E402
+
 SAMPLE_DIR = "/root/reference/data/sample"
 STATIONS_CSV = "/root/reference/data/bike_stations_coords.csv"
+needs_reference_data = pytest.mark.skipif(
+    not os.path.isdir(SAMPLE_DIR),
+    reason="reference sample data not present; the generated variant covers it",
+)
+# Small seeded bikegen inputs: one rides day, a 2-snapshot series.
+GEN_SEED = 11
+GEN_SIZES = dict(days=1, rides_per_day=400, stations=25, snapshots=2, bikes=80, move_share=0.1)
 
 
 # --- F10 / S3 ---------------------------------------------------------------
@@ -175,6 +188,56 @@ def test_latest_snapshot_files_by_embedded_ts(tmp_path):
 # --- CLI --------------------------------------------------------------------
 
 
+def test_cli_load_folder_metrics_backfill_generated(spark, tmp_path):
+    """End-to-end local CLI on generated inputs: load a day's CSV, re-load
+    it (the idempotent upsert adds nothing), compute the day's metrics,
+    dry-run backfill. Every count is checked against bikegen's truth."""
+    inputs = str(tmp_path / "inputs")
+    truth = bikegen.generate(GEN_SEED, inputs, **GEN_SIZES)
+    (day,) = truth.days
+    table_dir = str(tmp_path / "bike_rides")
+    load = [
+        "rides", "load-folder", os.path.join(inputs, "rides"),
+        "--table-dir", table_dir,
+        "--stations-csv", os.path.join(inputs, "stations.csv"),
+    ]
+    cli_main(load)
+    n1 = read_table(spark, table_dir).count()
+    assert n1 == truth.rows_added[day]
+
+    cli_main(load)
+    assert read_table(spark, table_dir).count() == n1
+
+    out = str(tmp_path / "2024.json")
+    cli_main(["metrics", "--latest", "--table-dir", table_dir, "--out", out])
+    doc = json.loads(open(out, encoding="utf-8").read())
+    assert doc["year"] == 2024
+    assert list(doc["days"]) == [day]
+    assert doc["days"][day]["total_rides"] == truth.metrics[day]["total_rides"]
+
+    cli_main(["backfill", "--table-dir", table_dir, "--dry-run"])
+
+
+def test_cli_pipeline_no_fetch_generated(spark, tmp_path):
+    """pipeline --no-fetch over a generated 2-snapshot series writes
+    exactly the series' status-change events."""
+    truth = bikegen.generate(GEN_SEED, str(tmp_path / "inputs"), **GEN_SIZES)
+    assert truth.events
+    events_dir = str(tmp_path / "events")
+    cli_main([
+        "pipeline", "--no-fetch",
+        "--landing-dir", str(tmp_path / "inputs" / "snapshots"),
+        "--events-dir", events_dir,
+        "--state-dir", str(tmp_path / "state"),
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+    ])
+    events = spark.read.parquet(events_dir)
+    assert events.count() == len(truth.events)
+    got = events.select("timestamp", "bike_id", "event_type", "station_id")
+    assert sorted(tuple(r) for r in got.collect()) == truth.events
+
+
+@needs_reference_data
 def test_cli_load_folder_metrics_backfill(spark, tmp_path):
     """End-to-end local CLI: load the real sample CSVs, re-load (the
     idempotent upsert must not duplicate), compute a day's metrics,
@@ -216,6 +279,7 @@ def test_cli_load_folder_metrics_backfill(spark, tmp_path):
     cli_main(["backfill", "--table-dir", table_dir, "--dry-run"])
 
 
+@needs_reference_data
 def test_cli_pipeline_no_fetch(tmp_path):
     """pipeline --no-fetch over the real snapshot pair = the streaming
     diff (24 events)."""

@@ -7,8 +7,11 @@ RDDs in the multi-query resident-service scenario)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from wroclaw_bike_stats_spark.operators import scratch
 
 
@@ -72,3 +75,73 @@ def test_checkpoint_tracked_concurrent_cache_materializing_in_flight(spark):
     finally:
         a.unpersist()
         b.unpersist()
+
+
+# --- keyed asset store -------------------------------------------------------
+
+SF = "/root/testdata/sf0.001"
+
+
+def test_store_rebuilds_after_corpus_rewrite(spark, tmp_path):
+    """Rewriting documents.parquet at the same path changes the corpus
+    fingerprint: the next neardup_components call must rebuild the pair
+    graph and the components from the new rows, not serve the cached
+    result (nor plan-keyed scratch cached over the old file)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    q = entry.queries()["neardup_components"]
+    sf_dir = tmp_path / "sf"
+    shutil.copytree(SF, sf_dir)
+    for f in sf_dir.iterdir():
+        f.chmod(0o644)
+    entry.release_shared()
+    before = {r["doc_id"] for r in q(spark, str(sf_dir)).collect()}
+
+    docs = pq.read_table(sf_dir / "documents.parquet")
+    half = docs.slice(0, docs.num_rows // 2)
+    pq.write_table(half, sf_dir / "documents.parquet")
+    new_ids = set(half.column("doc_id").to_pylist())
+    assert before - new_ids, "the rewrite must remove some paired docs"
+
+    warm = sorted(map(tuple, q(spark, str(sf_dir)).collect()))
+    entry.release_shared()
+    cold = sorted(map(tuple, q(spark, str(sf_dir)).collect()))
+    entry.release_shared()
+    assert warm == cold
+    assert {doc_id for doc_id, _ in warm} <= new_ids
+
+
+def test_release_shared_frees_every_asset(spark):
+    """After release_shared() no RDD persisted by the store or the
+    scratch list is left, and the on-disk asset root is deleted."""
+    entry.release_shared()
+    before = _persistent_ids(spark)
+    for name in ("neardup_components", "embedding_topk_ivf_indexed"):
+        entry.queries()[name](spark, SF).collect()
+    # at this scale the components are resolved on the driver, so pin
+    # the freeing of a checkpoint-backed asset directly
+    ck = scratch.shared_value(
+        spark, SF, "checkpoint_probe",
+        lambda: scratch.checkpoint_tracked(spark.range(10))[0],
+    )
+    assert ck.count() == 10
+    root = scratch._ROOT
+    assert root and os.path.isdir(root)
+    assert _persistent_ids(spark) - before
+    entry.release_shared()
+    assert _persistent_ids(spark) <= before
+    assert not os.path.exists(root)
+
+
+def test_shared_build_sec_names_each_asset(spark):
+    """The components and the IVF index are timed under their own names,
+    apart from the pair graph the components read."""
+    entry.release_shared()
+    for name in ("neardup_dedup_keep", "embedding_topk_ivf_indexed"):
+        entry.queries()[name](spark, SF).collect()
+    built = entry.shared_build_sec()
+    entry.release_shared()
+    assert {"ngram_pair_graph", "components", "ivf_index"} <= set(built)
+    assert all(v > 0 for v in built.values())

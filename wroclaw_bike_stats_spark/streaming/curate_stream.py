@@ -309,7 +309,7 @@ def make_ppl_band_filter(
     )
 
     # memoized {applicationId: (b_uni, b_bi, v_count)} — keyed by the
-    # batch's OWN SparkContext (the _SHARED_FRAMES discipline), so a
+    # batch's OWN SparkContext (the shared-asset store's keying), so a
     # filter object reused across a session/stream restart rebuilds
     # the broadcasts on the new context instead of scoring against a
     # dead broadcast from the old one.
