@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,10 +15,7 @@ from wroclaw_bike_stats_spark import ingest
 from wroclaw_bike_stats_spark.cli import main as cli_main
 from wroclaw_bike_stats_spark.cli import read_table
 
-sys.path.append(
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
-)
-import bikegen  # noqa: E402
+import bikegen  # perfbench/ is put on sys.path by conftest.py
 
 SAMPLE_DIR = "/root/reference/data/sample"
 STATIONS_CSV = "/root/reference/data/bike_stations_coords.csv"

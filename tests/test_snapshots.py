@@ -1,16 +1,23 @@
 """Golden tests for the snapshot track (S11, O14–O17, J4) against the
-reference's curated real snapshots.
+reference's curated real snapshots, and the same claims on a seeded
+``perfbench/bikegen.py`` series.
 
 Ports the assertions of reference tests/test_bike_status_changes.py:
 22–42 (snapA→snapB diff: bike 590066 freestanding→station emits the
 exact departed+arrived pair) and :97–139 (freestanding-electric
 normalization) to the Spark formulation — re-expressed over DataFrames,
 not translated.
+
+The real-data tests read snapA.json and snapB.json from the reference
+sample directory (``SAMPLE_DIR``) and skip where it is absent. The ``_generated``
+variants check the same claims on every host against the generator's
+own truth (its exact status-change events).
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +33,17 @@ from wroclaw_bike_stats_spark.sources.snapshots import (
 
 SNAP_A = "/root/reference/data/sample/snapA.json"
 SNAP_B = "/root/reference/data/sample/snapB.json"
+SAMPLE_DIR = os.path.dirname(SNAP_A)
+needs_reference_data = pytest.mark.skipif(
+    not os.path.isdir(SAMPLE_DIR),
+    reason="reference sample data not present; the generated variant covers it",
+)
+TRUTH_KEY = ["timestamp", "bike_id", "event_type", "station_id"]
+
+
+def _truth_events(df):
+    """An event frame as sorted bikegen ``Truth.events`` tuples."""
+    return sorted(tuple(r) for r in df.select(*TRUTH_KEY).collect())
 
 
 @pytest.fixture(scope="module")
@@ -43,6 +61,7 @@ def pair_events(spark, flat):
     return ts_b, diff_snapshot_pair(prev, curr, ts_b).cache()
 
 
+@needs_reference_data
 def test_flatten_counts(flat):
     """snapA has 2425 bikes, snapB 2423 (reference load_snapshot dict
     sizes over the same files)."""
@@ -53,6 +72,7 @@ def test_flatten_counts(flat):
     assert sorted(counts.values()) == [2423, 2425]
 
 
+@needs_reference_data
 def test_snapA_freestanding_electric_station_name(flat, spark):
     """Reference tests/test_bike_status_changes.py:134–139: bike 590066
     in snapA is freestanding (name AND id normalized)."""
@@ -65,6 +85,7 @@ def test_snapA_freestanding_electric_station_name(flat, spark):
     assert row[0]["station_id"] == "freestanding"
 
 
+@needs_reference_data
 def test_diff_detects_events_snapA_to_snapB(pair_events):
     """Reference tests/test_bike_status_changes.py:22–42: bike 590066
     freestanding→station yields exactly the departed+arrived pair, both
@@ -81,6 +102,7 @@ def test_diff_detects_events_snapA_to_snapB(pair_events):
     assert arr["timestamp"] == ts_b
 
 
+@needs_reference_data
 def test_pair_and_series_diffs_agree(flat, pair_events):
     """The N-snapshot window formulation must be event-for-event
     identical to the 2-snapshot join on the latest pair."""
@@ -90,6 +112,7 @@ def test_pair_and_series_diffs_agree(flat, pair_events):
     assert pair_set == series_set
 
 
+@needs_reference_data
 def test_series_diff_survives_downstream_filter(flat):
     """Regression (round 6): filtering the series-diff OUTPUT threw
     INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the _extract_* nested-JSON
@@ -189,6 +212,7 @@ def test_series_equals_pairwise_diffs_with_gaps(spark):
     assert ("t4", "b2", "arrived") in kinds
 
 
+@needs_reference_data
 def test_series_plan_has_no_cross_join(flat):
     plan = diff_snapshot_series(flat)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -325,3 +349,100 @@ def test_null_station_id_pair_series_agree(spark):
     assert pair_set == series_set
     kinds = {(r["bike_id"], r["event_type"]) for r in pair.collect()}
     assert kinds == {("b1", "departed"), ("b1", "arrived")}
+
+
+# --- the same claims on a generated series -----------------------------------
+
+
+@pytest.fixture(scope="module")
+def gen_flat(spark, bike_series):
+    _, paths = bike_series
+    flat = flatten_snapshots(read_snapshots(spark, paths)).cache()
+    yield flat
+    flat.unpersist()
+
+
+def _snapshot_ts(truth):
+    """The series' snapshot timestamps, oldest first (every pair of a
+    10%-moving fleet has events, so the events name them all)."""
+    return sorted({e[0] for e in truth.events})
+
+
+def test_flatten_counts_generated(bike_series, gen_flat):
+    """One row per present bike per snapshot (the generator's count)."""
+    truth, paths = bike_series
+    assert gen_flat.count() == truth.snapshot_rows
+    assert gen_flat.select("snapshot_ts").distinct().count() == len(paths)
+
+
+def test_freestanding_station_name_generated(bike_series, gen_flat):
+    """FREESTANDING* places normalize name AND id to 'freestanding';
+    ELECTRIC* bike types read 'electric' (O14, O16)."""
+    _, paths = bike_series
+    want = set()
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            doc = json.load(f)
+        for place in doc["data"][0]["cities"][0]["places"]:
+            if place["placeType"].startswith("FREESTANDING"):
+                (bike,) = place["bikes"]
+                electric = place["placeType"] == "FREESTANDING_ELECTRIC_BIKE"
+                want.add((doc["_fetched_at"], bike["number"], "electric" if electric else "standard"))
+    assert want
+    got = {
+        (r["snapshot_ts"], r["bike_id"], r["bike_type"])
+        for r in gen_flat.filter(F.col("station_id") == "freestanding").collect()
+    }
+    assert got == want
+    names = gen_flat.filter(F.col("station_id") == "freestanding").select("station_name").distinct()
+    assert [r[0] for r in names.collect()] == ["freestanding"]
+
+
+def test_series_diff_matches_truth_generated(bike_series, gen_flat):
+    """The series diff emits exactly the generator's status-change
+    events, each stamped with its CURRENT snapshot's timestamp."""
+    truth, _ = bike_series
+    assert _truth_events(diff_snapshot_series(gen_flat)) == truth.events
+
+
+def test_pair_and_series_diffs_agree_generated(bike_series, gen_flat):
+    """The pair diff on the last pair equals the series diff restricted
+    to that pair, and both equal the truth's events at that timestamp."""
+    truth, paths = bike_series
+    *_, ts_prev, ts_last = _snapshot_ts(truth)
+    assert len(_snapshot_ts(truth)) == len(paths) - 1
+    pair = diff_snapshot_pair(
+        gen_flat.filter(F.col("snapshot_ts") == ts_prev),
+        gen_flat.filter(F.col("snapshot_ts") == ts_last),
+        ts_last,
+    )
+    series_last = diff_snapshot_series(gen_flat).filter(F.col("timestamp") == ts_last)
+    assert sorted(tuple(r) for r in pair.collect()) == sorted(
+        tuple(r) for r in series_last.collect()
+    )
+    assert _truth_events(pair) == [e for e in truth.events if e[0] == ts_last]
+
+
+def test_series_diff_survives_downstream_filter_generated(bike_series, gen_flat):
+    """Filters on the series-diff OUTPUT compose: one bike's events, and
+    a predicate over the lagged station columns."""
+    truth, _ = bike_series
+    movers = sorted(
+        {e[1] for e in truth.events if e[2] == "departed"}
+        & {e[1] for e in truth.events if e[2] == "arrived"}
+    )
+    bike = movers[0]
+    ser = diff_snapshot_series(gen_flat)
+    assert _truth_events(ser.filter(F.col("bike_id") == bike)) == [
+        e for e in truth.events if e[1] == bike
+    ]
+    assert _truth_events(ser.filter(F.col("station_id") == "freestanding")) == [
+        e for e in truth.events if e[3] == "freestanding"
+    ]
+    # every generated place has a name, so no event loses it
+    assert ser.filter(F.col("station_name").isNotNull()).count() == len(truth.events)
+
+
+def test_series_plan_has_no_cross_join_generated(gen_flat):
+    plan = diff_snapshot_series(gen_flat)._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan

@@ -1,11 +1,19 @@
 """Streaming/batch equivalence: the Structured Streaming snapshot
 differ must emit the same event multiset as the batch series diff over
 the reference's real snapA/snapB (SURVEY.md §2.9; reference cadence
-src/pipeline.py:13–33)."""
+src/pipeline.py:13–33).
+
+The real-data tests copy snapA.json and snapB.json from the reference
+sample directory (``SAMPLE_DIR``) and skip where it is absent. The
+``_generated`` variants check the same claims on every host: the stream
+over a seeded ``perfbench/bikegen.py`` series must emit exactly the
+generator's own status-change events."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +27,12 @@ from wroclaw_bike_stats_spark.streaming.status_stream import run_available_now
 
 SNAP_A = "/root/reference/data/sample/snapA.json"
 SNAP_B = "/root/reference/data/sample/snapB.json"
+SAMPLE_DIR = os.path.dirname(SNAP_A)
+needs_reference_data = pytest.mark.skipif(
+    not os.path.isdir(SAMPLE_DIR),
+    reason="reference sample data not present; the generated variant covers it",
+)
+TRUTH_KEY = ["timestamp", "bike_id", "event_type", "station_id"]
 
 EVENT_KEY = ["timestamp", "bike_id", "event_type", "station_name", "station_id"]
 
@@ -39,6 +53,7 @@ def dirs(tmp_path):
     return d
 
 
+@needs_reference_data
 def test_streaming_matches_batch_diff(spark, dirs):
     """Both snapshots land before the first run: the stream (one file
     per micro-batch, state carried between batches) must emit exactly
@@ -55,6 +70,7 @@ def test_streaming_matches_batch_diff(spark, dirs):
     assert got.count() == 24
 
 
+@needs_reference_data
 def test_streaming_three_snapshots_incremental(spark, dirs, tmp_path):
     """Three snapshots across two runs: run 1 sees A+B, run 2 sees a
     synthetic C where bike 590066 vanishes — the union of both runs'
@@ -96,6 +112,7 @@ def test_streaming_three_snapshots_incremental(spark, dirs, tmp_path):
     assert dep.count() == 1
 
 
+@needs_reference_data
 def test_streaming_incremental_runs(spark, dirs):
     """Cron parity: snapA processed in run 1, snapB lands later and is
     processed by run 2 against the durable state — the union of both
@@ -118,6 +135,7 @@ def test_streaming_incremental_runs(spark, dirs):
     assert {r["event_type"] for r in ev590066.collect()} == {"departed", "arrived"}
 
 
+@needs_reference_data
 def test_state_versions_are_pruned(spark, dirs, tmp_path):
     """Long-running streams must not accumulate one state dir per
     micro-batch: after N batches at most 2 versions remain (newest +
@@ -140,3 +158,66 @@ def test_state_versions_are_pruned(spark, dirs, tmp_path):
     )
     versions = [n for n in os.listdir(dirs["state"]) if n.startswith("v")]
     assert len(versions) <= 2, versions
+
+
+# --- the same claims on a generated series -----------------------------------
+
+
+def _truth_events(df):
+    return sorted(tuple(r) for r in df.select(*TRUTH_KEY).collect())
+
+
+def _land(paths, dirs):
+    for p in paths:
+        shutil.copy2(p, os.path.join(dirs["landing"], os.path.basename(p)))
+
+
+def _run(spark, dirs):
+    return run_available_now(
+        spark, dirs["landing"], dirs["events"], dirs["state"], dirs["checkpoint"]
+    )
+
+
+def test_streaming_matches_truth_generated(spark, dirs, bike_series):
+    """All snapshots land before one run: the stream (one file per
+    micro-batch, state carried between batches) emits exactly the
+    generator's events."""
+    truth, paths = bike_series
+    _land(paths, dirs)
+    got = _run(spark, dirs)
+    assert _truth_events(got) == truth.events
+    assert got.count() == len(truth.events)
+
+
+def test_streaming_three_snapshots_incremental_generated(spark, dirs, bike_series):
+    """Run 1 sees the first two snapshots, run 2 the third: run 1 emits
+    the first pair's events and the union after run 2 is the truth."""
+    truth, paths = bike_series
+    _land(paths[:2], dirs)
+    first = _truth_events(_run(spark, dirs))
+    last_ts = max(e[0] for e in truth.events)
+    assert first == [e for e in truth.events if e[0] < last_ts]
+    _land(paths[2:], dirs)
+    assert _truth_events(_run(spark, dirs)) == truth.events
+
+
+def test_streaming_incremental_runs_generated(spark, dirs, bike_series):
+    """Cron parity, one snapshot per run against the durable state: the
+    first run emits nothing, and after each later run the event log is
+    the truth up to the newest landed snapshot; nothing is reprocessed."""
+    truth, paths = bike_series
+    _land(paths[:1], dirs)
+    assert _run(spark, dirs).count() == 0  # single snapshot → no pairs
+    for k, ts in enumerate(sorted({e[0] for e in truth.events}), start=1):
+        _land(paths[k : k + 1], dirs)
+        assert _truth_events(_run(spark, dirs)) == [e for e in truth.events if e[0] <= ts]
+
+
+def test_state_versions_are_pruned_generated(spark, dirs, bike_series):
+    """After three micro-batches at most 2 state versions remain."""
+    _, paths = bike_series
+    _land(paths, dirs)
+    _run(spark, dirs)
+    versions = [n for n in os.listdir(dirs["state"]) if n.startswith("v")]
+    assert len(versions) <= 2, versions
+    assert f"v{len(paths) - 1}" in versions, versions  # one batch per file ran

@@ -1128,8 +1128,9 @@ def repetition_stats(
     - ``"arrow"`` / ``"auto"`` (the DEFAULT since round 14 — one
       consistent family policy with ``gopher_quality_filter``; the
       stat is per-doc, so there is no rule-dependent regime and no
-      probe is needed): ``repetition_2gram_struct`` — one
-      zero-shuffle Arrow pass, no join-back, measured 4.7× over
+      probe is needed): ``repetition_2gram_struct`` — one Arrow
+      pass with no gram shuffle and no join-back (the only exchange
+      is the under-parallel input fan-out), measured 4.7× over
       native at sf10 (SCALING.md r11 note), and it dodges the native
       route's double gram shuffle. Byte-parity with native is pinned
       in tests; the arrow core is oracle-attested by the
@@ -1143,10 +1144,12 @@ def repetition_stats(
     # the per-row cost of `base` — and runs at the scan's parallelism
     # (one ~0.5 s task on a single-row-group input, computed TWICE by
     # a downstream total-order sort's range-sample + shuffle-map pass).
-    # Fan the (id, text) projection up once when under-parallel (no-op
-    # on parallel scans); both routes and the native gram explode
-    # share the one exchange. Per-row outputs (rounded fraction,
-    # integer counts) are partitioning-invariant.
+    # Fan the (id, text) projection up when under-parallel (no-op on
+    # parallel scans). The arrow route has this one exchange; the
+    # native route references `src` twice (base and the gram explode)
+    # and so plans two round-robin exchanges, one per reference.
+    # Per-row outputs (rounded fraction, integer counts) are
+    # partitioning-invariant.
     from wroclaw_bike_stats_spark.operators.fanout import ensure_parallelism
 
     src = ensure_parallelism(df.select(id_col, text_col))
@@ -1168,7 +1171,7 @@ def repetition_stats(
     # r15: the explode + (doc, gram) partial aggregation is this
     # route's dominant cost and runs at the scan's parallelism — one
     # task on a single-file input (measured 0.66 s at the bench sf).
-    # r16: reads the same fanned `src` as `base` (one shared exchange).
+    # r16: reads the same fanned `src` as `base` (its own exchange).
     grams = src.select(
         F.col(id_col), F.explode(word_bigrams(F.col(text_col))).alias("_g")
     )
