@@ -146,3 +146,56 @@ def test_exact_variants_agree_when_top5_covers_everything(rides, daily):
         for r in range_top_routes_exact(rides, "2025-04-01", "2025-04-30").collect()
     }
     assert approx_r == exact_r
+
+
+def _trips(day, trips):
+    """``n`` qualifying rides (duration 10) per (start, end, n) on ``day``."""
+    t = _ts(f"{day} 12:00:00")
+    return [(t, a, b) for a, b, n in trips for _ in range(n)]
+
+
+def _cycle(names):
+    """Three rides on each leg of the loop through ``names``."""
+    return [(a, b, 3) for a, b in zip(names, names[1:] + names[0])]
+
+
+def test_exact_variants_see_what_no_daily_top5_holds(spark):
+    """F makes 2 round trips on each of two days (4 arrivals, 4
+    departures) while five other stations make 3 each, so F is 6th on
+    both days but 1st over the range. Likewise route F → G (2 rides a
+    day) trails five 3-ride routes each day but leads the range with 4."""
+    trips = (
+        _trips("2025-05-01", [(s, s, 3) for s in "ABCDE"] + [("F", "F", 2)])
+        + _trips("2025-05-02", [(s, s, 3) for s in "HIJKL"] + [("F", "F", 2)])
+        + _trips("2025-05-03", _cycle("ABCDE") + [("F", "G", 2)])
+        + _trips("2025-05-04", _cycle("HIJKL") + [("F", "G", 2)])
+    )
+    rows = [
+        (uid, "1", t, t, a, b, 10, None, None, None, None, 1.0)
+        for uid, (t, a, b) in enumerate(trips)
+    ]
+    rides = spark.createDataFrame(rows, RIDES_SCHEMA)
+    daily = compute_all_days(rides)
+
+    def got_s(q, src):
+        return [
+            (r["station"], r["arrivals"], r["departures"], r["total"])
+            for r in q(src, "2025-05-01", "2025-05-02").collect()
+        ]
+
+    assert got_s(range_busiest_stations_exact, rides) == [
+        ("F", 4, 4, 8), ("A", 3, 3, 6), ("B", 3, 3, 6), ("C", 3, 3, 6), ("D", 3, 3, 6),
+    ]
+    assert got_s(range_busiest_stations, daily) == [
+        ("A", 3, 3, 6), ("B", 3, 3, 6), ("C", 3, 3, 6), ("D", 3, 3, 6), ("E", 3, 3, 6),
+    ]
+
+    def got_r(q, src):
+        return [(r["route"], r["rides"]) for r in q(src, "2025-05-03", "2025-05-04").collect()]
+
+    assert got_r(range_top_routes_exact, rides) == [
+        ("F → G", 4), ("A → B", 3), ("B → C", 3), ("C → D", 3), ("D → E", 3),
+    ]
+    assert got_r(range_top_routes, daily) == [
+        ("A → B", 3), ("B → C", 3), ("C → D", 3), ("D → E", 3), ("E → A", 3),
+    ]

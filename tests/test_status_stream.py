@@ -221,3 +221,26 @@ def test_state_versions_are_pruned_generated(spark, dirs, bike_series):
     versions = [n for n in os.listdir(dirs["state"]) if n.startswith("v")]
     assert len(versions) <= 2, versions
     assert f"v{len(paths) - 1}" in versions, versions  # one batch per file ran
+
+
+def test_retried_batch_rereads_its_predecessor_generated(spark, dirs, bike_series):
+    """A crash after batch 1 wrote its state but before its checkpoint
+    commit: the restart retries batch 1, which must re-read v0 (not its
+    own v1) and rewrite v1. The sink is at-least-once, so the retry may
+    append batch 1's events again, but their distinct set is the first
+    pair's truth."""
+    truth, paths = bike_series
+    _land(paths[:2], dirs)
+    _run(spark, dirs)
+    commits = os.path.join(dirs["checkpoint"], "commits")
+    os.remove(os.path.join(commits, "1"))
+    os.remove(os.path.join(commits, ".1.crc"))
+
+    got = _run(spark, dirs)
+    last_ts = max(e[0] for e in truth.events)
+    assert sorted(set(_truth_events(got))) == [e for e in truth.events if e[0] < last_ts]
+    versions = sorted(n for n in os.listdir(dirs["state"]) if n.startswith("v"))
+    assert versions[-1] == "v1", versions
+    state = spark.read.parquet(os.path.join(dirs["state"], "v1"))
+    second = flatten_snapshots(read_snapshots(spark, paths[1]))
+    assert sorted(state.select(*second.columns).collect()) == sorted(second.collect())

@@ -45,33 +45,6 @@ def test_dedupe_batch_deterministic_pick(spark):
         assert got == {1: "100", 2: "999"}
 
 
-def test_dedupe_batch_wide_mode_hash_tiebreak(spark):
-    """``wide=True`` (the corpus-scale sort-key variant): still exactly
-    one deterministic row per uid, stable across partitionings — the
-    picked row may differ from the full-tuple order (it follows the
-    row hash), but NOT across runs."""
-    batch = spark.createDataFrame(
-        [
-            _row(1, bike="300"),
-            _row(1, bike="100"),
-            _row(1, bike="200"),
-            _row(2, bike="999"),
-            _row(None, bike="n1"),
-        ],
-        RIDES_SCHEMA,
-    )
-    picks = []
-    for n_parts in (1, 7, 32):
-        out = dedupe_batch_by_uid(batch.repartition(n_parts), wide=True)
-        assert out.filter("uid IS NULL").count() == 1
-        picks.append(
-            {r["uid"]: r["bike_number"]
-             for r in out.filter("uid IS NOT NULL").collect()}
-        )
-        assert set(picks[-1]) == {1, 2}
-    assert picks[0] == picks[1] == picks[2]
-
-
 def test_null_uids_all_pass_through(spark):
     batch = spark.createDataFrame(
         [_row(None, bike="a"), _row(None, bike="b"), _row(3)], RIDES_SCHEMA

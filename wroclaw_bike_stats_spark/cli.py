@@ -8,12 +8,14 @@
 - ``pipeline`` ← src/pipeline.py:13–33 (fetch snapshot → diff → append)
 
 Storage: the ``bike_rides`` table is a versioned parquet directory
-(``v0``, ``v1``, …; highest version wins). Each load reads the current
-version, applies the idempotent first-writer-wins upsert (S8) and
-writes the next version — append-only history, no in-place overwrite
-of files a lazy plan may still be reading. A Delta/Lakehouse
-deployment replaces this with ``MERGE INTO`` + time travel; the CLI
-semantics are identical.
+(``v0``, ``v1``, …) kept by ``versioned.py``: the newest version whose
+``_SUCCESS`` marker landed is current, so a crashed write is ignored.
+Each load reads the current version, applies the idempotent
+first-writer-wins upsert (S8) and writes the next version —
+append-only history, no in-place overwrite of files a lazy plan may
+still be reading. Every version is kept: the previous one is the
+backfill's backup. A Delta/Lakehouse deployment replaces this with
+``MERGE INTO`` + time travel; the CLI semantics are identical.
 
 Network commands (``rides latest/date/all``, ``pipeline`` fetch) go
 through ingest.py's injectable fetch; everything else is fully local.
@@ -29,7 +31,7 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wroclaw_bike_stats_spark import ingest
+from wroclaw_bike_stats_spark import ingest, versioned
 from wroclaw_bike_stats_spark.session import get_spark
 
 PORTAL_URL = "https://opendata.cui.wroclaw.pl/dataset/wrmprzejazdy_data"
@@ -39,31 +41,12 @@ NEXTBIKE_URL = "https://api-gateway.nextbike.pl/api/maps/service/pl/locations"
 # --- versioned parquet table ------------------------------------------------
 
 
-def _versions(table_dir: str) -> list[int]:
-    if not os.path.isdir(table_dir):
-        return []
-    out = []
-    for name in os.listdir(table_dir):
-        if name.startswith("v"):
-            try:
-                out.append(int(name[1:]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
 def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
-    vs = _versions(table_dir)
-    if not vs:
-        return None
-    return spark.read.parquet(os.path.join(table_dir, f"v{vs[-1]}"))
+    return versioned.read(spark, table_dir)
 
 
 def write_next_version(df: DataFrame, table_dir: str) -> str:
-    vs = _versions(table_dir)
-    nxt = os.path.join(table_dir, f"v{(vs[-1] + 1) if vs else 0}")
-    df.write.mode("overwrite").parquet(nxt)
-    return nxt
+    return versioned.write(df, table_dir)
 
 
 # --- rides ------------------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from wroclaw_bike_stats_spark.functions.distance import haversine_km
 
 
-def dedupe_batch_by_uid(batch: DataFrame, wide: bool = False) -> DataFrame:
+def dedupe_batch_by_uid(batch: DataFrame) -> DataFrame:
     """Within one ingest batch keep one row per non-null uid; NULL-uid
     rows all pass through.
 
@@ -40,26 +40,9 @@ def dedupe_batch_by_uid(batch: DataFrame, wide: bool = False) -> DataFrame:
     row. Any deterministic pick satisfies the reference's contract
     (its daily files never actually contain duplicate uids; the index
     exists to make *re-runs* idempotent).
-
-    COST WARNING for reuse: the default orders the window by EVERY
-    non-uid column — fine at daily-batch scale with the rides schema
-    (its only in-repo call site), but on a wide corpus-scale table
-    that makes the per-group sort key the whole row (sort buffers and
-    spill files carry every column twice). For such inputs pass
-    ``wide=True``: the sort key becomes one ``xxhash64`` over the row
-    (plus the full tuple only as a final tie-break between genuine
-    hash collisions, which the comparator then touches ~never) —
-    same determinism contract, near-constant sort-key width.
     """
     nulls = batch.filter(F.col("uid").isNull())
-    others = [c for c in batch.columns if c != "uid"]
-    if wide:
-        order = [
-            F.xxhash64(*[F.col(c) for c in others]).asc(),
-            *[F.col(c).asc_nulls_first() for c in others],
-        ]
-    else:
-        order = [F.col(c).asc_nulls_first() for c in others]
+    order = [F.col(c).asc_nulls_first() for c in batch.columns if c != "uid"]
     w = Window.partitionBy("uid").orderBy(*order)
     deduped = (
         batch.filter(F.col("uid").isNotNull())

@@ -6,7 +6,7 @@ yearly rebuilds (reference: src/compute_daily_metrics.py:30–194,
 279–291). That loop is an artifact of SQLite, not of the semantics.
 
 Spark-first design — ``compute_all_days`` computes EVERY day in one
-pass:
+query:
 - one ``groupBy(ride_date)`` for all scalar metrics (conditional
   aggregation folds round_trips / left_outside into the same shuffle);
 - hourly histogram, busiest-stations and top-routes as grouped
@@ -14,11 +14,11 @@ pass:
 - results stitched with joins on ``ride_date`` (each side is one row
   per day — tiny post-aggregation, AQE picks broadcast).
 
-At 100 TB: the input is scanned once per aggregation family (4 scans
-total, all column-pruned + predicate-pushed), every aggregation is
-map-side-partial first, and a year-partitioned Parquet/Delta layout
-makes the day/year filters prune partitions. A single-day query
-touches one partition, not the corpus.
+At 100 TB: the input is scanned once per grouped count (5 scans:
+scalars, histogram, departures, arrivals, routes — all column-pruned +
+predicate-pushed), every aggregation is map-side-partial first, and a
+year-partitioned Parquet/Delta layout makes the day/year filters prune
+partitions. A single-day query touches one partition, not the corpus.
 
 Semantics reproduced exactly (correctness-critical, SURVEY §1.2):
 - global ``duration > 2`` filter on every metric (reference :46);
@@ -101,41 +101,64 @@ def hourly_histogram_by_day(rides: DataFrame) -> DataFrame:
     )
 
 
-def busiest_stations_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
-    """A9–A11 + J3 + K1: per-day top-N stations by arrivals+departures.
+def station_counts(rides: DataFrame, *keys: str) -> DataFrame:
+    """A9–A11 + J3: arrivals, departures and their total per
+    (``keys``, station) over qualifying rides.
 
     Departures and arrivals are separate grouped counts (each excludes
     null and 'Poza stacją'), combined with a native FULL OUTER join —
     see module docstring for why the reference's UNION workaround is
     not ported.
     """
-    base = _filtered(rides)
     dep = (
-        base.filter(
+        rides.filter(
             F.col("start_station").isNotNull()
             & (F.col("start_station") != OUTSIDE_STATION)
         )
-        .groupBy("ride_date", F.col("start_station").alias("station"))
+        .groupBy(*keys, F.col("start_station").alias("station"))
         .agg(F.count(F.lit(1)).alias("departures"))
     )
     arr = (
-        base.filter(
+        rides.filter(
             F.col("end_station").isNotNull()
             & (F.col("end_station") != OUTSIDE_STATION)
         )
-        .groupBy("ride_date", F.col("end_station").alias("station"))
+        .groupBy(*keys, F.col("end_station").alias("station"))
         .agg(F.count(F.lit(1)).alias("arrivals"))
     )
-    combined = (
-        dep.join(arr, ["ride_date", "station"], "full_outer")
+    return (
+        dep.join(arr, [*keys, "station"], "full_outer")
         .select(
-            "ride_date",
+            *keys,
             "station",
             F.coalesce("arrivals", F.lit(0)).alias("arrivals"),
             F.coalesce("departures", F.lit(0)).alias("departures"),
         )
         .withColumn("total", (F.col("arrivals") + F.col("departures")).cast("long"))
     )
+
+
+def route_counts(rides: DataFrame, *keys) -> DataFrame:
+    """A12: ride count per ``keys`` (names or columns over the route's
+    ends) over qualifying rides, excluding nulls, round trips, and
+    'Poza stacją' on either end (reference :156–180)."""
+    s, e = F.col("start_station"), F.col("end_station")
+    return (
+        rides.filter(
+            s.isNotNull()
+            & e.isNotNull()
+            & (s != e)
+            & (s != OUTSIDE_STATION)
+            & (e != OUTSIDE_STATION)
+        )
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("rides"))
+    )
+
+
+def busiest_stations_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
+    """A9–A11 + K1: per-day top-N stations by arrivals+departures."""
+    combined = station_counts(_filtered(rides), "ride_date")
     w = Window.partitionBy("ride_date").orderBy(F.desc("total"), F.asc("station"))
     topn = combined.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= top_n
@@ -165,21 +188,8 @@ def busiest_stations_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
 
 
 def top_routes_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
-    """A12 + K2: per-day top-N (start,end) routes, excluding nulls,
-    round trips, and 'Poza stacją' on either end (reference :156–180)."""
-    s, e = F.col("start_station"), F.col("end_station")
-    routes = (
-        _filtered(rides)
-        .filter(
-            s.isNotNull()
-            & e.isNotNull()
-            & (s != e)
-            & (s != OUTSIDE_STATION)
-            & (e != OUTSIDE_STATION)
-        )
-        .groupBy("ride_date", "start_station", "end_station")
-        .agg(F.count(F.lit(1)).alias("rides"))
-    )
+    """A12 + K2: per-day top-N (start,end) routes (see route_counts)."""
+    routes = route_counts(_filtered(rides), "ride_date", "start_station", "end_station")
     w = Window.partitionBy("ride_date").orderBy(
         F.desc("rides"), F.asc("start_station"), F.asc("end_station")
     )
@@ -206,7 +216,10 @@ def top_routes_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
 
 
 def compute_all_days(rides: DataFrame, year: int | None = None) -> DataFrame:
-    """All metrics for all (or one year's) days — one job, not O(days).
+    """All metrics for all (or one year's) days — one action, not
+    O(days); AQE runs it as several query-stage jobs, one per shuffle
+    or broadcast stage plus the result (12 on a parquet input: 8 + 3 +
+    1), a count that does not grow with the number of days.
 
     Returns one row per ride_date with the full DAILY_METRICS_SCHEMA
     payload. Each aggregation family is post-aggregation tiny (rows =

@@ -10,9 +10,9 @@ layer stays dumb.
 Faithfulness notes:
 - A17/A18 re-aggregate the stored per-day TOP-5 lists, not base data —
   an *approximation by design* (stations/routes outside a day's top-5
-  are invisible); reproduced exactly. Exact variants from base rides
-  are trivial compositions of the daily plans and deliberately not
-  substituted.
+  are invisible); reproduced exactly. Exact variants over base rides
+  share the daily plans' counting (``station_counts`` /
+  ``route_counts``) and are offered alongside, not substituted.
 - The reference's JS sort leaves ties in Map-insertion order; the
   engine uses deterministic tie-breaks (total/rides DESC, then name
   ASC) — documented deviation, only visible on exact ties.
@@ -28,6 +28,8 @@ driver-cheap by construction; the heavy lifting happened once in
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from wroclaw_bike_stats_spark.plans.daily_metrics import route_counts, station_counts
 
 # The per-day metric keys the UI charts as line series (app.js:141–149).
 SERIES_METRICS = [
@@ -152,9 +154,12 @@ def range_top_routes(
 
 
 def _rides_in_range(rides: DataFrame, start: str, end: str) -> DataFrame:
+    """Qualifying rides (the daily plans' ``duration > 2``) that start
+    in [start, end]."""
     return rides.filter(
         (F.to_date("start_time") >= F.lit(start).cast("date"))
         & (F.to_date("start_time") <= F.lit(end).cast("date"))
+        & (F.col("duration") > 2)
     )
 
 
@@ -163,33 +168,8 @@ def range_busiest_stations_exact(
 ) -> DataFrame:
     """Exact A17: arrivals+departures per station over base rides in
     the range — stations never in a daily top-5 are visible here."""
-    from wroclaw_bike_stats_spark.schemas import OUTSIDE_STATION
-
-    base = _rides_in_range(rides, start, end).filter(F.col("duration") > 2)
-    dep = (
-        base.filter(
-            F.col("start_station").isNotNull()
-            & (F.col("start_station") != OUTSIDE_STATION)
-        )
-        .groupBy(F.col("start_station").alias("station"))
-        .agg(F.count(F.lit(1)).alias("departures"))
-    )
-    arr = (
-        base.filter(
-            F.col("end_station").isNotNull()
-            & (F.col("end_station") != OUTSIDE_STATION)
-        )
-        .groupBy(F.col("end_station").alias("station"))
-        .agg(F.count(F.lit(1)).alias("arrivals"))
-    )
     return (
-        dep.join(arr, "station", "full_outer")
-        .select(
-            "station",
-            F.coalesce("arrivals", F.lit(0)).alias("arrivals"),
-            F.coalesce("departures", F.lit(0)).alias("departures"),
-        )
-        .withColumn("total", (F.col("arrivals") + F.col("departures")).cast("long"))
+        station_counts(_rides_in_range(rides, start, end))
         .orderBy(F.desc("total"), F.asc("station"))
         .limit(top_n)
     )
@@ -201,20 +181,9 @@ def range_top_routes_exact(
     """Exact A18: route counts over base rides in the range under the
     F8 label, same exclusions as the daily plan (nulls, round trips,
     'Poza stacją')."""
-    from wroclaw_bike_stats_spark.schemas import OUTSIDE_STATION
-
-    s, e = F.col("start_station"), F.col("end_station")
-    base = _rides_in_range(rides, start, end).filter(
-        (F.col("duration") > 2)
-        & s.isNotNull()
-        & e.isNotNull()
-        & (s != e)
-        & (s != OUTSIDE_STATION)
-        & (e != OUTSIDE_STATION)
-    )
+    route = route_label(F.col("start_station"), F.col("end_station"))
     return (
-        base.groupBy(route_label(s, e).alias("route"))
-        .agg(F.count(F.lit(1)).alias("rides"))
+        route_counts(_rides_in_range(rides, start, end), route.alias("route"))
         .orderBy(F.desc("rides"), F.asc("route"))
         .limit(top_n)
     )

@@ -8,11 +8,11 @@ idempotent — the lakehouse answer is ``MERGE INTO``; this is the
 plain-parquet formulation of the same semantics.
 
 Layout: the store is hash-bucketed by key into ``kb=<i>/v<j>``
-directories — per-bucket versioning, the same never-overwrite-what-a-
-lazy-plan-reads discipline as streaming/status_stream.py state (Spark
-refuses to overwrite a path it is reading; versions sidestep it and a
-crash mid-write leaves the previous version intact, since a version
-becomes current only once its ``_SUCCESS`` marker lands).
+directories — each bucket is a ``versioned.py`` store, the same
+never-overwrite-what-a-lazy-plan-reads rule as the rides table and the
+status stream's state (Spark refuses to overwrite a path it is
+reading; a crash mid-write leaves the previous version intact, since a
+version becomes current only once its ``_SUCCESS`` marker lands).
 
 Scale shape: a micro-batch touches only the buckets its keys hash to —
 the merge reads and rewrites O(touched buckets), not O(store). Bucket
@@ -30,51 +30,29 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wroclaw_bike_stats_spark import versioned
+
 _BUCKET_PREFIX = "kb="
-_VERSION_PREFIX = "v"
 
 
 def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
 
 
-def _versions(bucket_dir: str) -> list[int]:
-    if not os.path.isdir(bucket_dir):
-        return []
-    out = []
-    for name in os.listdir(bucket_dir):
-        if name.startswith(_VERSION_PREFIX) and os.path.exists(
-            os.path.join(bucket_dir, name, "_SUCCESS")
-        ):
-            try:
-                out.append(int(name[len(_VERSION_PREFIX):]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _latest_paths(store_dir: str) -> list[str]:
+def _bucket_dirs(store_dir: str) -> list[str]:
     if not os.path.isdir(store_dir):
         return []
-    paths = []
-    for name in sorted(os.listdir(store_dir)):
-        if not name.startswith(_BUCKET_PREFIX):
-            continue
-        vs = _versions(os.path.join(store_dir, name))
-        if vs:
-            paths.append(
-                os.path.join(store_dir, name, f"{_VERSION_PREFIX}{vs[-1]}")
-            )
-    return paths
+    return [
+        os.path.join(store_dir, name)
+        for name in sorted(os.listdir(store_dir))
+        if name.startswith(_BUCKET_PREFIX)
+    ]
 
 
 def read_store(spark: SparkSession, store_dir: str) -> DataFrame | None:
     """Current store contents: the latest committed version of every
     bucket."""
-    paths = _latest_paths(store_dir)
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    return versioned.read(spark, *_bucket_dirs(store_dir))
 
 
 def merge_upsert_batch(
@@ -100,35 +78,16 @@ def merge_upsert_batch(
             _bucket_expr(keys, n_buckets) == kb
         )
         bucket_dir = os.path.join(store_dir, f"{_BUCKET_PREFIX}{kb}")
-        vs = _versions(bucket_dir)
-        if vs:
-            existing = spark.read.parquet(
-                os.path.join(bucket_dir, f"{_VERSION_PREFIX}{vs[-1]}")
-            )
+        existing = versioned.read(spark, bucket_dir)
+        if existing is not None:
             new_rows = bucket_rows.join(
                 existing.select(*keys), keys, "left_anti"
             )
-            merged = existing.unionByName(new_rows)
-            next_v = vs[-1] + 1
-        else:
-            merged = bucket_rows
-            next_v = 0
-        merged.write.mode("overwrite").parquet(
-            os.path.join(bucket_dir, f"{_VERSION_PREFIX}{next_v}")
-        )
-        _prune(bucket_dir, keep=2)
-
-
-def _prune(bucket_dir: str, keep: int = 2) -> None:
-    # Keep current + predecessor (a retried batch may re-read it);
-    # older versions bound storage on long streams.
-    import shutil
-
-    for v in _versions(bucket_dir)[:-keep]:
-        shutil.rmtree(
-            os.path.join(bucket_dir, f"{_VERSION_PREFIX}{v}"),
-            ignore_errors=True,
-        )
+            bucket_rows = existing.unionByName(new_rows)
+        versioned.write(bucket_rows, bucket_dir)
+        # Keep current + predecessor; older versions bound storage on
+        # long streams.
+        versioned.prune(bucket_dir, keep=2)
 
 
 def run_merge_stream(

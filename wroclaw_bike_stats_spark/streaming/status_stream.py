@@ -12,12 +12,16 @@ and the "previous snapshot" becomes explicit, durable per-bike state:
   checkpoint, never re-listed into the batch.
 - **state**: the flattened per-bike rows of the most recently
   processed snapshot, persisted as versioned parquet (tiny: one row
-  per bike in the fleet). Equivalent to the keyed last-seen state a
-  ``transformWithStateInPandas`` operator would carry, but (a) the
-  disappearance case needs to observe "snapshot happened, bike row
-  didn't" — which per-key arbitrary-state operators only reach via
-  timers — and (b) the union-with-state formulation lets streaming
-  and batch share ONE diff implementation
+  per bike in the fleet) under ``versioned.py``'s commit rule: batch
+  N writes ``v<N>`` and reads the newest committed version below N,
+  and the newest two are kept. A batch retried after a crash (its
+  state written, its checkpoint commit not) thus re-reads its
+  predecessor and rewrites its own version. Equivalent to the keyed
+  last-seen state a ``transformWithStateInPandas`` operator would
+  carry, but (a) the disappearance case needs to observe "snapshot
+  happened, bike row didn't" — which per-key arbitrary-state
+  operators only reach via timers — and (b) the union-with-state
+  formulation lets streaming and batch share ONE diff implementation
   (``operators.snapshot_diff.diff_snapshot_series``), so the two
   paths cannot drift.
 - **processing**: each micro-batch unions the carried state rows with
@@ -26,8 +30,9 @@ and the "previous snapshot" becomes explicit, durable per-bike state:
   pair (state, first-new-snapshot).
 - **sink**: append-only parquet event log; at-least-once, matching
   the reference's re-run-appends-duplicates contract (reference
-  src/bike_status_changes.py:188–209). Exactly-once would need an
-  idempotent/transactional sink (e.g. Delta MERGE on a dedup key).
+  src/bike_status_changes.py:188–209); a retried batch appends its
+  events again. Exactly-once would need an idempotent/transactional
+  sink (e.g. Delta MERGE on a dedup key).
 - **trigger**: ``Trigger.AvailableNow`` for cron parity (drain the
   landing dir, then stop); drop the trigger for continuous tailing.
 
@@ -38,16 +43,13 @@ bike_id — no dense grid, no cross join (see diff_snapshot_series).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wroclaw_bike_stats_spark import versioned
 from wroclaw_bike_stats_spark.operators.snapshot_diff import diff_snapshot_series
 from wroclaw_bike_stats_spark.schemas import SNAPSHOT_SCHEMA
 from wroclaw_bike_stats_spark.sources.snapshots import flatten_snapshots
-
-_STATE_PREFIX = "v"
 
 
 class StatusChangeStream:
@@ -75,54 +77,13 @@ class StatusChangeStream:
         self.state_dir = state_dir
         self.checkpoint_dir = checkpoint_dir
 
-    # -- state ------------------------------------------------------------
-
-    def _state_versions(self) -> list[int]:
-        if not os.path.isdir(self.state_dir):
-            return []
-        out = []
-        for name in os.listdir(self.state_dir):
-            if name.startswith(_STATE_PREFIX):
-                try:
-                    out.append(int(name[len(_STATE_PREFIX):]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    def _read_state(self) -> DataFrame | None:
-        versions = self._state_versions()
-        if not versions:
-            return None
-        path = os.path.join(self.state_dir, f"{_STATE_PREFIX}{versions[-1]}")
-        return self.spark.read.parquet(path)
-
-    def _write_state(self, flat: DataFrame, batch_id: int) -> None:
-        # Versioned dirs: never overwrite the path a lazy plan may
-        # still read from; _prune_state drops stale versions after the
-        # batch's write lands.
-        path = os.path.join(self.state_dir, f"{_STATE_PREFIX}{batch_id}")
-        flat.write.mode("overwrite").parquet(path)
-
-    def _prune_state(self, keep: int = 2) -> None:
-        # Keep the newest version plus its predecessor (crash safety:
-        # the predecessor is what a retried batch would re-read) and
-        # delete the rest, bounding state storage on long-running
-        # streams to O(fleet) instead of O(fleet × batches).
-        import shutil
-
-        for v in self._state_versions()[:-keep]:
-            shutil.rmtree(
-                os.path.join(self.state_dir, f"{_STATE_PREFIX}{v}"),
-                ignore_errors=True,
-            )
-
     # -- batch processing --------------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         flat = flatten_snapshots(batch_df)
         if flat.isEmpty():
             return
-        state = self._read_state()
+        state = versioned.read(self.spark, self.state_dir, below=batch_id)
         combined = state.unionByName(flat) if state is not None else flat
 
         events = diff_snapshot_series(combined)
@@ -130,10 +91,14 @@ class StatusChangeStream:
 
         # New state = the rows of the newest snapshot in this batch.
         latest_ts = combined.agg(F.max("snapshot_ts")).collect()[0][0]
-        self._write_state(
-            combined.filter(F.col("snapshot_ts") == latest_ts), batch_id
+        versioned.write(
+            combined.filter(F.col("snapshot_ts") == latest_ts),
+            self.state_dir,
+            batch_id,
         )
-        self._prune_state()
+        # The newest version and its predecessor, which a retry of this
+        # batch re-reads; storage stays O(fleet), not O(fleet × batches).
+        versioned.prune(self.state_dir, keep=2)
 
     # -- driver ------------------------------------------------------------
 
