@@ -141,3 +141,33 @@ def test_recompute_does_not_leak_session_conf(spark, paths):
     before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     refresh_daily_metrics(spark, events_path, metrics_path, recompute_dates=[D1])
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == before
+
+
+def test_cli_metrics_refresh_requires_events_dir(tmp_path, capsys):
+    """No default: the old one named the status event log, which is not
+    an events table."""
+    from wroclaw_bike_stats_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["metrics-refresh", "--metrics-dir", str(tmp_path / "metrics")])
+    assert exc.value.code == 2
+    assert "--events-dir" in capsys.readouterr().err
+
+
+def test_status_event_log_is_refused_naming_missing_columns(spark, paths):
+    """A frame shaped like the status stream's event log gets a
+    ValueError naming event_date, value and user_id, not an
+    UNRESOLVED_COLUMN from deep inside the plan."""
+    from wroclaw_bike_stats_spark.schemas import STATUS_EVENT_SCHEMA
+
+    events_path, metrics_path = paths
+    log = spark.createDataFrame(
+        [("2024-06-09T12:00:00", "590066", "departed", None, None, 51.1, 17.0, "classic", None)],
+        STATUS_EVENT_SCHEMA,
+    )
+    with pytest.raises(ValueError, match="event_date, value, user_id"):
+        daily_event_aggregate(log)
+    log.write.parquet(events_path)
+    for dates in (None, [D1]):
+        with pytest.raises(ValueError, match="event_date, value, user_id"):
+            refresh_daily_metrics(spark, events_path, metrics_path, recompute_dates=dates)

@@ -145,3 +145,36 @@ def test_shared_build_sec_names_each_asset(spark):
     entry.release_shared()
     assert {"ngram_pair_graph", "components", "ivf_index"} <= set(built)
     assert all(v > 0 for v in built.values())
+
+
+def test_shared_value_builds_once_under_concurrent_callers(spark, tmp_path):
+    """8 threads on one session ask for one key at once: one build, and
+    every thread gets the one object that build made."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    builds = []
+    start = threading.Barrier(8, timeout=60)
+
+    def build():
+        builds.append(threading.get_ident())
+        time.sleep(0.3)  # hold the build open while the others arrive
+        return spark.range(10).collect()
+
+    def ask(_):
+        start.wait()
+        return scratch.shared_value(spark, str(tmp_path), "single_flight", build)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(ask, range(8), timeout=120))
+        assert len(builds) == 1
+        assert all(g is got[0] for g in got)
+        assert [r.id for r in got[0]] == list(range(10))
+    finally:
+        sys.setswitchinterval(switch)
+        entry.release_shared()

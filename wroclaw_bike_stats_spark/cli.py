@@ -312,7 +312,12 @@ def build_parser() -> argparse.ArgumentParser:
         help="Incrementally refresh the partitioned daily-metrics store "
         "(only new event dates are read and written)",
     )
-    refresh.add_argument("--events-dir", default="data/processed/status_events")
+    # No default: the status event log is not an events table (it has
+    # no event_date/value/user_id), so a default there could only fail.
+    refresh.add_argument(
+        "--events-dir", required=True,
+        help="date-partitioned events table (event_date, value, user_id)",
+    )
     refresh.add_argument("--metrics-dir", default="data/processed/daily_agg")
     refresh.add_argument(
         "--recompute-date", action="append", default=None,

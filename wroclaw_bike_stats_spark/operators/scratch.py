@@ -13,7 +13,9 @@ fingerprint is ``(file name, st_size, st_mtime_ns)`` of every
 ``*.parquet`` entry of ``sf_dir`` (``"nosrc"`` when there is none), so a
 corpus rewritten at the same path misses instead of serving stale rows.
 Assets that live on disk are written under ``asset_dir()``, one
-per-process temporary root.
+per-process temporary root. Builds are single-flight per key: threads
+of one session asking for an asset while it builds wait for that one
+build.
 
 **Invalidation.** On a miss, entries of the same name for another
 session, corpus or version are dropped before the build, so at most one
@@ -44,6 +46,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 import time
 
 from pyspark.sql import DataFrame
@@ -56,6 +59,10 @@ _FINGERPRINTS: dict = {}
 # name → wall seconds spent building it (plan + eager materialization)
 _BUILD_SEC: dict = {}
 _ROOT: str | None = None
+# guards the dicts above; held for bookkeeping, never across a build
+_LOCK = threading.Lock()
+# key → lock held while that key's build runs
+_BUILDING: dict = {}
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -87,25 +94,46 @@ def asset_dir(name: str) -> str:
     """A new empty directory under the store's root for an on-disk
     asset; deleted when the asset is dropped."""
     global _ROOT
-    if _ROOT is None:
-        _ROOT = tempfile.mkdtemp(prefix="wbs-assets-")
-    return tempfile.mkdtemp(prefix=f"{name}-", dir=_ROOT)
+    with _LOCK:
+        if _ROOT is None:
+            _ROOT = tempfile.mkdtemp(prefix="wbs-assets-")
+        return tempfile.mkdtemp(prefix=f"{name}-", dir=_ROOT)
 
 
 def shared_value(spark, sf_dir: str, name: str, build):
-    """``build()`` memoized once per (session, corpus version, name)."""
+    """``build()`` memoized once per (session, corpus version, name).
+
+    Single-flight: threads asking for one key while it builds wait for
+    that build instead of starting their own; builds of other keys run
+    meanwhile. A failed build is not stored, so a waiter then tries
+    itself."""
     fp = _fingerprint(sf_dir)
-    if _FINGERPRINTS.setdefault(sf_dir, fp) != fp:
-        _FINGERPRINTS[sf_dir] = fp
-        _drop([k for k in _STORE if k[1] == sf_dir and k[2] != fp])
-        _release_scratch()
     key = (spark.sparkContext.applicationId, sf_dir, fp, name)
-    if key not in _STORE:
-        _drop([k for k in _STORE if k[3] == name])
+    with _LOCK:
+        if _FINGERPRINTS.setdefault(sf_dir, fp) != fp:
+            _FINGERPRINTS[sf_dir] = fp
+            _drop([k for k in _STORE if k[1] == sf_dir and k[2] != fp])
+            _release_scratch()
+        if key in _STORE:
+            return _STORE[key]
+        building = _BUILDING.setdefault(key, threading.Lock())
+    with building:
+        with _LOCK:
+            if key in _STORE:
+                return _STORE[key]
+            _drop([k for k in _STORE if k[3] == name])
         t0 = time.perf_counter()
-        _STORE[key] = build()
-        _BUILD_SEC[name] = _BUILD_SEC.get(name, 0.0) + time.perf_counter() - t0
-    return _STORE[key]
+        try:
+            value = build()
+            with _LOCK:
+                _STORE[key] = value
+                _BUILD_SEC[name] = _BUILD_SEC.get(name, 0.0) + time.perf_counter() - t0
+        finally:
+            # after the store, so a late caller finds the value, not a
+            # missing lock
+            with _LOCK:
+                _BUILDING.pop(key, None)
+        return value
 
 
 def shared_frame(spark, sf_dir: str, name: str, build):
@@ -166,12 +194,13 @@ def _release_scratch() -> None:
 def release() -> None:
     """Drop every store entry and scratch frame, and the asset root."""
     global _ROOT
-    _drop(list(_STORE))
-    _BUILD_SEC.clear()
-    _release_scratch()
-    if _ROOT is not None:
-        shutil.rmtree(_ROOT, ignore_errors=True)
-        _ROOT = None
+    with _LOCK:
+        _drop(list(_STORE))
+        _BUILD_SEC.clear()
+        _release_scratch()
+        if _ROOT is not None:
+            shutil.rmtree(_ROOT, ignore_errors=True)
+            _ROOT = None
 
 
 def _persistent_rdd_ids(spark) -> set:

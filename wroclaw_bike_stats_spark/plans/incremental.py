@@ -28,9 +28,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+EVENT_COLUMNS = ("event_date", "value", "user_id")
+
+
+def _require_event_columns(events: DataFrame) -> None:
+    """Fail naming the columns an events table lacks, e.g. when handed
+    the status event log (timestamp, bike_id, event_type, ...)."""
+    missing = [c for c in EVENT_COLUMNS if c not in events.columns]
+    if missing:
+        raise ValueError(
+            f"not an events table: missing column(s) {', '.join(missing)}; "
+            f"it has {', '.join(events.columns)}"
+        )
+
+
 def daily_event_aggregate(events: DataFrame) -> DataFrame:
     """The per-day metric family maintained incrementally (same shape
     as q_daily_event_metrics, keyed by the partition column)."""
+    _require_event_columns(events)
     return events.groupBy("event_date").agg(
         F.count(F.lit(1)).alias("total_events"),
         F.round(F.sum("value"), 3).alias("total_value"),
@@ -68,6 +83,7 @@ def refresh_daily_metrics(
     dynamic partition overwrite — other dates' files are untouched.
     """
     events = spark.read.parquet(events_path)
+    _require_event_columns(events)
     if recompute_dates is not None:
         todo = events.filter(F.col("event_date").isin(recompute_dates))
         mode, conf = "overwrite", "dynamic"
