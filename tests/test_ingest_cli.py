@@ -233,6 +233,21 @@ def test_cli_pipeline_no_fetch_generated(spark, tmp_path):
     assert sorted(tuple(r) for r in got.collect()) == truth.events
 
 
+def test_cli_pipeline_no_fetch_empty_landing_dir(spark, tmp_path, capsys):
+    """pipeline --no-fetch before the first snapshot has landed: no
+    batch has committed, so the event log is empty, not missing."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    cli_main([
+        "pipeline", "--no-fetch",
+        "--landing-dir", str(landing),
+        "--events-dir", str(tmp_path / "events"),
+        "--state-dir", str(tmp_path / "state"),
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+    ])
+    assert "Event log rows: 0" in capsys.readouterr().out
+
+
 @needs_reference_data
 def test_cli_load_folder_metrics_backfill(spark, tmp_path):
     """End-to-end local CLI: load the real sample CSVs, re-load (the
@@ -294,4 +309,4 @@ def test_cli_pipeline_no_fetch(tmp_path):
     ])
     import glob
 
-    assert glob.glob(str(tmp_path / "events" / "*.parquet"))
+    assert glob.glob(str(tmp_path / "events" / "batch_id=*" / "*.parquet"))

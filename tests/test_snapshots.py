@@ -446,3 +446,18 @@ def test_series_diff_survives_downstream_filter_generated(bike_series, gen_flat)
 def test_series_plan_has_no_cross_join_generated(gen_flat):
     plan = diff_snapshot_series(gen_flat)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
+
+
+def test_series_diff_one_broadcast_join_five_jobs_generated(spark, gen_flat):
+    """Over a materialized input (the persisted union the status stream
+    hands it) the series diff is one broadcast join against the
+    snapshot table plus one shuffle on bike_id: at most 5 jobs."""
+    gen_flat.count()
+    series = diff_snapshot_series(gen_flat)
+    plan = series._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    series.collect()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(jobs) <= 5, sorted(jobs)

@@ -23,7 +23,10 @@ from wroclaw_bike_stats_spark.sources.snapshots import (
     flatten_snapshots,
     read_snapshots,
 )
-from wroclaw_bike_stats_spark.streaming.status_stream import run_available_now
+from wroclaw_bike_stats_spark.streaming.status_stream import (
+    StatusChangeStream,
+    run_available_now,
+)
 
 SNAP_A = "/root/reference/data/sample/snapA.json"
 SNAP_B = "/root/reference/data/sample/snapB.json"
@@ -226,9 +229,8 @@ def test_state_versions_are_pruned_generated(spark, dirs, bike_series):
 def test_retried_batch_rereads_its_predecessor_generated(spark, dirs, bike_series):
     """A crash after batch 1 wrote its state but before its checkpoint
     commit: the restart retries batch 1, which must re-read v0 (not its
-    own v1) and rewrite v1. The sink is at-least-once, so the retry may
-    append batch 1's events again, but their distinct set is the first
-    pair's truth."""
+    own v1) and rewrite v1. The retry overwrites batch 1's event
+    directory, so the log is the first pair's truth row for row."""
     truth, paths = bike_series
     _land(paths[:2], dirs)
     _run(spark, dirs)
@@ -238,9 +240,44 @@ def test_retried_batch_rereads_its_predecessor_generated(spark, dirs, bike_serie
 
     got = _run(spark, dirs)
     last_ts = max(e[0] for e in truth.events)
-    assert sorted(set(_truth_events(got))) == [e for e in truth.events if e[0] < last_ts]
+    assert _truth_events(got) == [e for e in truth.events if e[0] < last_ts]
     versions = sorted(n for n in os.listdir(dirs["state"]) if n.startswith("v"))
     assert versions[-1] == "v1", versions
     state = spark.read.parquet(os.path.join(dirs["state"], "v1"))
     second = flatten_snapshots(read_snapshots(spark, paths[1]))
     assert sorted(state.select(*second.columns).collect()) == sorted(second.collect())
+
+
+def test_uncommitted_event_batch_is_not_read_generated(spark, dirs, bike_series):
+    """A ``batch_id=<N>`` directory without its ``_SUCCESS`` marker (a
+    crash mid-write) is never read by ``events()``, while a plain
+    parquet read of the log root still reads every batch."""
+    truth, paths = bike_series
+    _land(paths, dirs)
+    _run(spark, dirs)
+    last = os.path.join(dirs["events"], f"batch_id={len(paths) - 1}")
+    os.remove(os.path.join(last, "_SUCCESS"))
+
+    got = StatusChangeStream(
+        spark, dirs["landing"], dirs["events"], dirs["state"], dirs["checkpoint"]
+    ).events()
+    last_ts = max(e[0] for e in truth.events)
+    assert _truth_events(got) == [e for e in truth.events if e[0] < last_ts]
+    assert _truth_events(spark.read.parquet(dirs["events"])) == truth.events
+
+
+def test_micro_batch_job_count_generated(spark, dirs, bike_series):
+    """One micro-batch after the first runs at most 10 jobs: the batch's
+    JSON is parsed once and the state read infers no schema. The stream
+    thread runs its jobs under the query's run id as job group."""
+    _, paths = bike_series
+    _land(paths[:1], dirs)
+    _run(spark, dirs)
+    _land(paths[1:2], dirs)
+    q = StatusChangeStream(
+        spark, dirs["landing"], dirs["events"], dirs["state"], dirs["checkpoint"]
+    ).start()
+    q.awaitTermination()
+    assert [p.numInputRows > 0 for p in q.recentProgress] == [True]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 10, sorted(jobs)

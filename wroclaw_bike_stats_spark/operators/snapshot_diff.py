@@ -22,9 +22,9 @@ Two Spark formulations:
    the same events for EVERY consecutive pair in one pass. On the
    latest pair it is event-for-event identical to the reference; at
    scale it turns "re-run the script per minute" into a single job
-   over a day/month of snapshots (shuffle once on bike_id, then
-   narrow). The streaming form (streaming/status_stream.py) carries
-   the same state keyed by bike_id.
+   over a day/month of snapshots (one broadcast join of the tiny
+   snapshot table plus one shuffle on bike_id). The streaming form
+   (streaming/status_stream.py) carries the same state per bike_id.
 """
 
 from __future__ import annotations
@@ -96,84 +96,66 @@ def diff_snapshot_series(bike_snapshots: DataFrame) -> DataFrame:
 
     Sparse formulation — no dense bike×snapshot grid, no cross join:
 
-    1. Index the distinct snapshot timestamps 0..max (one row per
-       snapshot file — tiny, broadcast everywhere).
-    2. One window per bike over its OBSERVED rows only, carrying
-       lag(snap_idx)/lead(snap_idx) plus the lagged station info.
-    3. Absence is detected by index arithmetic, not by null grid rows:
+    1. The distinct snapshot timestamps, each with its neighbours in
+       the series (``prev_snap``/``next_snap``) — tiny, broadcast.
+    2. One window per bike over its OBSERVED rows only, carrying its
+       own previous/next observation (``p_ts``/``n_ts``) plus the
+       lagged station info.
+    3. Absence is detected by comparing the two, not by null grid rows:
        - arrived  @ this row's ts: first-ever observation after the
-         series start, reappearance after a gap (prev_idx < idx-1),
-         or a consecutive move (station changed).
-       - departed @ snapshot[idx+1].ts with THIS row's info: the bike
-         is absent from the next snapshot (next_idx > idx+1, or no
-         next observation while idx < max) — the reference stamps a
-         disappearance with the *current* (post-gap) snapshot's ts.
+         series start, or reappearance after a gap (``p_ts`` is not
+         ``prev_snap``), or a consecutive move (station changed).
+       - departed @ ``next_snap`` with THIS row's info: the bike is
+         absent from the next snapshot (``n_ts`` is not ``next_snap``)
+         — the reference stamps a disappearance with the *current*
+         (post-gap) snapshot's ts.
        - departed @ this row's ts with the LAGGED info: consecutive
          move.
 
-    Cost: one shuffle on bike_id for the window + two broadcast joins
-    against the snapshot index. Work is O(|observations|), which is
-    ≤ the dense grid's |bikes|×|snapshots| by exactly the absence
-    sparsity — at 100× snapshot retention the grid dominated; this
-    doesn't. The streaming form (streaming/status_stream.py) carries
-    the same per-bike last-seen state incrementally.
+    Cost: one broadcast join against the snapshot table plus one
+    shuffle on bike_id for the window. Work is O(|observations|),
+    which is ≤ the dense grid's |bikes|×|snapshots| by exactly the
+    absence sparsity — at 100× snapshot retention the grid dominated;
+    this doesn't. The streaming form (streaming/status_stream.py)
+    carries the same per-bike last-seen state incrementally.
     """
-    # Snapshot index: tiny (one row per snapshot); the single-partition
-    # windows below only ever run on this table, never on bike rows.
-    w_all = Window.partitionBy(F.lit(1))
-    w_ord = w_all.orderBy("snapshot_ts")
-    snap_idx = (
-        bike_snapshots.select("snapshot_ts")
-        .distinct()
-        .select(
-            "snapshot_ts",
-            (F.row_number().over(w_ord) - 1).alias("snap_idx"),
-        )
-        .withColumn("max_idx", F.max("snap_idx").over(w_all))
+    # Tiny (one row per snapshot): the single-partition window only
+    # ever runs on this table, never on bike rows.
+    w_snap = Window.partitionBy(F.lit(1)).orderBy("snapshot_ts")
+    snaps = bike_snapshots.select("snapshot_ts").distinct().select(
+        "snapshot_ts",
+        F.lag("snapshot_ts").over(w_snap).alias("prev_snap"),
+        F.lead("snapshot_ts").over(w_snap).alias("next_snap"),
     )
 
-    obs = bike_snapshots.join(F.broadcast(snap_idx), "snapshot_ts")
-    w = Window.partitionBy("bike_id").orderBy("snap_idx")
-    seq = obs.select(
+    w = Window.partitionBy("bike_id").orderBy("snapshot_ts")
+    seq = bike_snapshots.join(F.broadcast(snaps), "snapshot_ts").select(
         "bike_id",
         "snapshot_ts",
-        "snap_idx",
-        "max_idx",
+        "prev_snap",
+        "next_snap",
         *_INFO_COLS,
-        F.lag("snap_idx").over(w).alias("p_idx"),
-        F.lead("snap_idx").over(w).alias("n_idx"),
+        F.lag("snapshot_ts").over(w).alias("p_ts"),
+        F.lead("snapshot_ts").over(w).alias("n_ts"),
         *[F.lag(c).over(w).alias(f"p_{c}") for c in _INFO_COLS],
     )
 
-    consecutive = F.col("p_idx") == F.col("snap_idx") - 1
+    consecutive = F.col("p_ts") == F.col("prev_snap")
     # null-safe: a move involving a null station_id still counts
     # (matches diff_snapshot_pair's null-safe `moved`)
     moved = consecutive & ~F.col("p_station_id").eqNullSafe(F.col("station_id"))
-    appeared = (
-        (F.col("p_idx").isNull() & (F.col("snap_idx") > 0))
-        | (F.col("p_idx") < F.col("snap_idx") - 1)
+    appeared = F.col("prev_snap").isNotNull() & (
+        F.col("p_ts").isNull() | (F.col("p_ts") < F.col("prev_snap"))
     )
-    absent_next = (
-        F.col("n_idx").isNull() & (F.col("snap_idx") < F.col("max_idx"))
-    ) | (F.col("n_idx") > F.col("snap_idx") + 1)
-
-    # Disappearance events are stamped with the ts of the snapshot the
-    # bike went missing from — left-join (snap_idx + 1) back to the
-    # index up front so all three event kinds emit from ONE pass.
-    next_ts = snap_idx.select(
-        F.col("snap_idx").alias("_next_idx"), F.col("snapshot_ts").alias("_next_ts")
-    )
-    seq = seq.withColumn("_next_idx", F.col("snap_idx") + 1).join(
-        F.broadcast(next_ts), "_next_idx", "left"
+    absent_next = F.col("next_snap").isNotNull() & (
+        F.col("n_ts").isNull() | (F.col("n_ts") > F.col("next_snap"))
     )
 
     # Single-pass emission, same array-of-structs + explode pattern as
-    # diff_snapshot_pair: one scan, one window, no union. (The earlier
-    # three-branch union re-scanned the nested-JSON flatten per branch
-    # and tripped Spark's nested-schema pruning when a consumer
-    # filtered the result — INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the
-    # _extract_* aliases; single-scan emission is both the faster plan
-    # and immune to that rewrite.)
+    # diff_snapshot_pair: one scan, one window, no union. A union of
+    # per-kind branches re-scans the nested-JSON flatten per branch and
+    # trips Spark's nested-schema pruning when a consumer filters the
+    # result (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the _extract_* aliases).
     def ev(ts_col, kind, cols):
         return F.struct(
             ts_col.alias("timestamp"),
@@ -186,7 +168,7 @@ def diff_snapshot_series(bike_snapshots: DataFrame) -> DataFrame:
     evs = F.filter(
         F.array(
             F.when(moved, ev(F.col("snapshot_ts"), "departed", lagged)),
-            F.when(absent_next, ev(F.col("_next_ts"), "departed", own)),
+            F.when(absent_next, ev(F.col("next_snap"), "departed", own)),
             F.when(appeared | moved, ev(F.col("snapshot_ts"), "arrived", own)),
         ),
         lambda x: x.isNotNull(),

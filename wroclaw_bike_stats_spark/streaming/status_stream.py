@@ -24,20 +24,20 @@ and the "previous snapshot" becomes explicit, durable per-bike state:
   formulation lets streaming and batch share ONE diff implementation
   (``operators.snapshot_diff.diff_snapshot_series``), so the two
   paths cannot drift.
-- **processing**: each micro-batch unions the carried state rows with
-  the batch's flattened snapshots and runs the series diff — emitting
-  exactly the events of every consecutive pair, including the bridge
-  pair (state, first-new-snapshot).
-- **sink**: append-only parquet event log; at-least-once, matching
-  the reference's re-run-appends-duplicates contract (reference
-  src/bike_status_changes.py:188–209); a retried batch appends its
-  events again. Exactly-once would need an idempotent/transactional
-  sink (e.g. Delta MERGE on a dedup key).
+- **processing**: each micro-batch persists the union of the carried
+  state rows and its flattened snapshots (one JSON parse per batch) and
+  runs the series diff — emitting exactly the events of every
+  consecutive pair, including the bridge pair (state, first-new-snapshot).
+- **sink**: one parquet directory per micro-batch,
+  ``events_dir/batch_id=<N>/``, under the same commit rule. A retried
+  batch overwrites its own directory, so the log holds each batch id
+  exactly once. ``events()`` reads the committed batches; a plain
+  ``spark.read.parquet(events_dir)`` reads the whole log.
 - **trigger**: ``Trigger.AvailableNow`` for cron parity (drain the
   landing dir, then stop); drop the trigger for continuous tailing.
 
 Scale: state size is O(fleet), events are O(changes); each batch does
-one broadcast join against the snapshot index and one shuffle keyed by
+one broadcast join against the snapshot table and one shuffle keyed by
 bike_id — no dense grid, no cross join (see diff_snapshot_series).
 """
 
@@ -46,9 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wroclaw_bike_stats_spark import versioned
+from wroclaw_bike_stats_spark import schemas, versioned
 from wroclaw_bike_stats_spark.operators.snapshot_diff import diff_snapshot_series
-from wroclaw_bike_stats_spark.schemas import SNAPSHOT_SCHEMA
 from wroclaw_bike_stats_spark.sources.snapshots import flatten_snapshots
 
 
@@ -58,7 +57,7 @@ class StatusChangeStream:
     Parameters
     ----------
     landing_dir : directory the fetcher drops snapshot JSONs into.
-    events_dir  : append-only parquet event log (output).
+    events_dir  : parquet event log, one directory per batch (output).
     state_dir   : versioned per-bike state (internal).
     checkpoint_dir : Structured Streaming checkpoint location.
     """
@@ -80,22 +79,21 @@ class StatusChangeStream:
     # -- batch processing --------------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        schema = schemas.BIKE_SNAPSHOT_SCHEMA
+        state = versioned.read(self.spark, self.state_dir, below=batch_id, schema=schema)
         flat = flatten_snapshots(batch_df)
-        if flat.isEmpty():
-            return
-        state = versioned.read(self.spark, self.state_dir, below=batch_id)
-        combined = state.unionByName(flat) if state is not None else flat
-
-        events = diff_snapshot_series(combined)
-        events.write.mode("append").parquet(self.events_dir)
-
-        # New state = the rows of the newest snapshot in this batch.
-        latest_ts = combined.agg(F.max("snapshot_ts")).collect()[0][0]
-        versioned.write(
-            combined.filter(F.col("snapshot_ts") == latest_ts),
-            self.state_dir,
-            batch_id,
-        )
+        combined = (state.unionByName(flat) if state is not None else flat).persist()
+        try:
+            latest_ts = combined.agg(F.max("snapshot_ts")).collect()[0][0]
+            if latest_ts is None:  # no state and no bike in the batch
+                return
+            events = diff_snapshot_series(combined)
+            versioned.write(events, self.events_dir, batch_id, prefix=versioned.BATCH)
+            # New state = the rows of the newest snapshot in this batch.
+            latest = combined.filter(F.col("snapshot_ts") == latest_ts)
+            versioned.write(latest, self.state_dir, batch_id)
+        finally:
+            combined.unpersist()
         # The newest version and its predecessor, which a retry of this
         # batch re-reads; storage stays O(fleet), not O(fleet × batches).
         versioned.prune(self.state_dir, keep=2)
@@ -104,7 +102,7 @@ class StatusChangeStream:
 
     def start(self, available_now: bool = True):
         stream = (
-            self.spark.readStream.schema(SNAPSHOT_SCHEMA)
+            self.spark.readStream.schema(schemas.SNAPSHOT_SCHEMA)
             .option("multiLine", True)
             # process snapshot files oldest-first so consecutive-pair
             # semantics hold across batches
@@ -120,7 +118,9 @@ class StatusChangeStream:
         return writer.start()
 
     def events(self) -> DataFrame:
-        return self.spark.read.parquet(self.events_dir)
+        return versioned.read_batches(
+            self.spark, self.events_dir, schemas.STATUS_EVENT_SCHEMA
+        )
 
 
 def run_available_now(
