@@ -317,8 +317,8 @@ def test_curation_stages_run_in_streaming(spark, docs, tmp_path):
     """The stateless curation stages (quality predicates, PII scrub,
     split assignment) are plain column expressions, so the SAME code
     runs under Structured Streaming — batch/stream outputs are
-    row-identical. (The dedup/repetition stages need state and live in
-    streaming/dedup_stream.py / merge_sink.py instead.)"""
+    row-identical. (The dedup/repetition stages need state across
+    batches; streaming/curate_stream.py carries it.)"""
     from wroclaw_bike_stats_spark.operators import pipeline as P
 
     src_dir = str(tmp_path / "src")

@@ -1,6 +1,6 @@
-"""The versioned-directory store (versioned.py) behind the rides table,
-the status stream's state and the merge sink's buckets: a version
-exists once its ``_SUCCESS`` marker is in it."""
+"""The versioned-directory store (versioned.py) behind the rides table
+and the status stream's state and event log: a version exists once its
+``_SUCCESS`` marker is in it."""
 
 from __future__ import annotations
 

@@ -14,8 +14,8 @@ over the staged batch); here the "already seen" test is similarity,
 not key equality.
 
 Store layout (plain parquet dirs under ``store_dir``; appends only,
-no in-place rewrites — the streaming/merge_sink.py discipline is not
-needed because nothing here overwrites what a lazy plan reads):
+no in-place rewrites — no versioned commit is needed because nothing
+here overwrites what a lazy plan reads):
 
 - ``docs/``      admitted documents, ``text`` already span-stripped;
                  the ORIGINAL text rides along as ``text_orig`` (the

@@ -1,7 +1,6 @@
 """Versioned parquet directories: the one storage rule behind the
-``bike_rides`` table (cli.py), the status stream's per-bike state and
-event log (streaming/status_stream.py) and the merge sink's buckets
-(streaming/merge_sink.py).
+``bike_rides`` table (cli.py) and the status stream's per-bike state
+and event log (streaming/status_stream.py).
 
 A store is a directory of numbered subdirectories: ``v<N>`` versions
 of a table, whose newest is read, or ``batch_id=<N>`` batches of a log,
@@ -45,20 +44,19 @@ def versions(root: str, prefix: str = "v") -> list[int]:
 
 def read(
     spark: SparkSession,
-    *roots: str,
+    root: str,
+    *,
     below: int | None = None,
     schema: StructType | None = None,
 ) -> DataFrame | None:
-    """The newest committed version of each root (the newest one below
-    ``below`` when given), read as one DataFrame, of ``schema`` when
-    given (no inference job); None when no root has one."""
-    paths = []
-    for root in roots:
-        vs = [v for v in versions(root) if below is None or v < below]
-        if vs:
-            paths.append(_path(root, vs[-1]))
+    """The newest committed version under ``root`` (the newest one below
+    ``below`` when given), read with ``schema`` when given (no inference
+    job); None when there is none."""
+    vs = [v for v in versions(root) if below is None or v < below]
+    if not vs:
+        return None
     reader = spark.read.schema(schema) if schema else spark.read
-    return reader.parquet(*paths) if paths else None
+    return reader.parquet(_path(root, vs[-1]))
 
 
 def read_batches(spark: SparkSession, root: str, schema: StructType) -> DataFrame:
