@@ -3,10 +3,13 @@ reference's tests/test_compute_daily_metrics.py:34–100 (via FIXTURES.md §3)."
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
 
+import bikegen  # perfbench/ is put on sys.path by conftest.py
+from wroclaw_bike_stats_spark.operators.transform import transform_rides
 from wroclaw_bike_stats_spark.plans.daily_metrics import (
     compute_all_days,
     compute_daily_metrics,
@@ -16,6 +19,8 @@ from wroclaw_bike_stats_spark.plans.daily_metrics import (
     write_year_file,
 )
 from wroclaw_bike_stats_spark.schemas import RIDES_SCHEMA
+from wroclaw_bike_stats_spark.sources.rides_csv import read_raw_rides
+from wroclaw_bike_stats_spark.sources.stations_csv import read_stations
 
 
 def _ts(s):
@@ -167,3 +172,50 @@ def test_load_year_metrics_tolerates_json_int_doubles(tmp_path, spark):
     path.write_text(_json.dumps({"year": 2025, "days": {"2025-01-01": day}}))
     row = load_year_metrics(spark, path).collect()[0]
     assert row["avg_distance_km"] == 0.0 and row["total_rides"] == 0
+
+
+def _generated(spark, seed, out, **sizes):
+    """(truth, rides) of a seeded bikegen input, loaded as the CLI
+    loads it: raw CSVs through ``transform_rides``."""
+    truth = bikegen.generate(seed, out, snapshots=1, bikes=10, **sizes)
+    stations = read_stations(spark, os.path.join(out, "stations.csv"))
+    raw = read_raw_rides(spark, os.path.join(out, "rides"))
+    return truth, transform_rides(raw, stations)
+
+
+@pytest.mark.parametrize("seed", [2, 7])
+def test_all_days_match_truth_generated(spark, tmp_path, seed):
+    """Nine stations (six named) and 60 rides a day: on these seeds,
+    equal station and route counts fall on both sides of the fifth
+    place, so the top-5 tie-breaks decide which entries are listed."""
+    truth, rides = _generated(spark, seed, str(tmp_path), days=2, rides_per_day=60, stations=9)
+    by_day = {r["ride_date"]: r.asDict(recursive=True) for r in compute_all_days(rides).collect()}
+    assert sorted(by_day) == truth.days
+    for day in truth.days:
+        single = compute_daily_metrics(rides, day)
+        for key, want in truth.metrics[day].items():
+            assert by_day[day][key] == want, (day, key)
+            assert single[key] == want, (day, key)
+
+
+def _job_count(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_daily_metrics_job_count_generated(spark, tmp_path):
+    """The metrics are one plan of two aggregates, with no join and no
+    window: at most 4 jobs for one day and for every day at once."""
+    truth, rides = _generated(spark, 11, str(tmp_path / "in"), days=2, rides_per_day=400, stations=25)
+    table = str(tmp_path / "rides.parquet")
+    rides.write.parquet(table)
+    rides = spark.read.parquet(table)
+    day_jobs = _job_count(spark, "metrics-day", lambda: compute_daily_metrics(rides, truth.days[0]))
+    all_jobs = _job_count(spark, "metrics-all", lambda: compute_all_days(rides).collect())
+    assert 0 < day_jobs <= 4, day_jobs
+    assert 0 < all_jobs <= 4, all_jobs

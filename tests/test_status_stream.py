@@ -226,6 +226,17 @@ def test_state_versions_are_pruned_generated(spark, dirs, bike_series):
     assert f"v{len(paths) - 1}" in versions, versions  # one batch per file ran
 
 
+def test_state_version_is_one_file_generated(spark, dirs, bike_series):
+    """Each state version is one parquet file: the state is O(fleet),
+    and the next batch reads it with one task."""
+    _, paths = bike_series
+    _land(paths, dirs)
+    _run(spark, dirs)
+    last = os.path.join(dirs["state"], f"v{len(paths) - 1}")
+    parts = [n for n in os.listdir(last) if n.startswith("part-") and n.endswith(".parquet")]
+    assert len(parts) == 1, parts
+
+
 def test_retried_batch_rereads_its_predecessor_generated(spark, dirs, bike_series):
     """A crash after batch 1 wrote its state but before its checkpoint
     commit: the restart retries batch 1, which must re-read v0 (not its

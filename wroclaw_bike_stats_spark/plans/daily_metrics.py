@@ -6,19 +6,21 @@ yearly rebuilds (reference: src/compute_daily_metrics.py:30–194,
 279–291). That loop is an artifact of SQLite, not of the semantics.
 
 Spark-first design — ``compute_all_days`` computes EVERY day in one
-query:
-- one ``groupBy(ride_date)`` for all scalar metrics (conditional
-  aggregation folds round_trips / left_outside into the same shuffle);
-- hourly histogram, busiest-stations and top-routes as grouped
-  aggregations with window ``row_number() <= 5`` top-k per day;
-- results stitched with joins on ``ride_date`` (each side is one row
-  per day — tiny post-aggregation, AQE picks broadcast).
+query of two aggregates; nothing is stitched or windowed:
+- ``ride_facts`` expands each qualifying ride into its facts (the
+  day, its hour, its start station as a departure, its end station as
+  an arrival, its route), and one ``groupBy(ride_date, family, key_a,
+  key_b)`` counts them: a Generate under one map-side-partial
+  aggregate, the Expand-style plan of GROUPING SETS;
+- one ``groupBy(ride_date)`` assembles each day's row: the scalars
+  from the day family, the histogram and the top-5 lists from sorted
+  ``collect_list``s over the other families.
 
-At 100 TB: the input is scanned once per grouped count (5 scans:
-scalars, histogram, departures, arrivals, routes — all column-pruned +
-predicate-pushed), every aggregation is map-side-partial first, and a
-year-partitioned Parquet/Delta layout makes the day/year filters prune
-partitions. A single-day query touches one partition, not the corpus.
+Scale: the input is scanned once, column-pruned and predicate-pushed;
+a year-partitioned Parquet/Delta layout makes the day/year filters
+prune partitions, so a single-day query touches one partition. Each
+day's station and route lists are collected into one task before the
+top-5 slice: at most min(rides that day, stations²) entries per day.
 
 Semantics reproduced exactly (correctness-critical, SURVEY §1.2):
 - global ``duration > 2`` filter on every metric (reference :46);
@@ -27,8 +29,9 @@ Semantics reproduced exactly (correctness-critical, SURVEY §1.2):
 - avg/total distance rounded 3 dp, avg duration 2 dp, falsy → 0;
 - busiest stations: departures+arrivals full-outer combine (the
   reference emulates FULL OUTER with UNION + 2 LEFT JOINs because
-  SQLite lacked it, reference :112–141 — Catalyst does it natively;
-  the workaround is deliberately NOT ported);
+  SQLite lacked it, reference :112–141 — here both roles are facts of
+  one station key, summed by the same aggregate; the workaround is
+  deliberately NOT ported);
 - top-5 tie-breaks: (total DESC, station ASC) / (rides DESC,
   start ASC, end ASC) — part of the output contract.
 """
@@ -39,7 +42,7 @@ import json
 from pathlib import Path
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wroclaw_bike_stats_spark.schemas import OUTSIDE_STATION
@@ -49,218 +52,145 @@ def _with_ride_date(rides: DataFrame) -> DataFrame:
     return rides.withColumn("ride_date", F.to_date("start_time"))
 
 
-def _filtered(rides: DataFrame) -> DataFrame:
-    """O10: the global duration > 2 predicate (strict)."""
-    return _with_ride_date(rides).filter(F.col("duration") > 2)
+def _at_station(end: Column) -> Column:
+    """A ride end that counts at a station: not null, not 'Poza stacją'."""
+    return end.isNotNull() & (end != OUTSIDE_STATION)
 
 
-def scalar_metrics_by_day(rides: DataFrame) -> DataFrame:
-    """A1, A3–A8 for every day in one shuffle (conditional aggregation)."""
-    s, e = F.col("start_station"), F.col("end_station")
-    return _filtered(rides).groupBy("ride_date").agg(
-        F.count(F.lit(1)).alias("total_rides"),
-        F.coalesce(F.round(F.avg("distance"), 3), F.lit(0.0)).alias("avg_distance_km"),
-        F.coalesce(F.round(F.sum("distance"), 3), F.lit(0.0)).alias("total_distance_km"),
-        F.coalesce(F.round(F.avg("duration"), 2), F.lit(0.0)).alias("avg_duration_min"),
-        F.coalesce(F.sum("duration"), F.lit(0)).cast("long").alias("total_duration_min"),
-        F.sum(
-            F.when(s.isNotNull() & e.isNotNull() & (s == e), 1).otherwise(0)
-        ).alias("round_trips"),
-        F.sum(F.when(e == OUTSIDE_STATION, 1).otherwise(0)).alias(
-            "left_outside_station"
-        ),
+def _fact(
+    family: str,
+    key_a: Column | None = None,
+    key_b: Column | None = None,
+    departures: int = 0,
+    arrivals: int = 0,
+) -> Column:
+    return F.struct(
+        F.lit(family).alias("family"),
+        F.lit(key_a).cast("string").alias("key_a"),
+        F.lit(key_b).cast("string").alias("key_b"),
+        F.lit(departures).alias("departures"),
+        F.lit(arrivals).alias("arrivals"),
     )
 
 
-def hourly_histogram_by_day(rides: DataFrame) -> DataFrame:
-    """A2: per-day map hour-string → count; absent hours omitted,
-    keys unpadded ('0'..'23') — reference :56–63; zero-fill is the UI's
-    job (reference: web/js/app.js:133)."""
-    per_hour = (
-        _filtered(rides)
-        .groupBy("ride_date", F.hour("start_time").alias("hour"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return (
-        per_hour.groupBy("ride_date")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("hour"), F.col("cnt"))
-                    )
-                )
-            ).alias("hist_int")
-        )
-        .select(
-            "ride_date",
-            F.transform_keys(
-                "hist_int", lambda k, _: k.cast("string")
-            ).alias("bike_rentals_histogram"),
-        )
-    )
+def ride_facts(rides: DataFrame) -> DataFrame:
+    """A1–A12 + J3: each qualifying ride as one row per fact it counts
+    for, keyed by (ride_date, family, key_a, key_b). Families:
 
-
-def station_counts(rides: DataFrame, *keys: str) -> DataFrame:
-    """A9–A11 + J3: arrivals, departures and their total per
-    (``keys``, station) over qualifying rides.
-
-    Departures and arrivals are separate grouped counts (each excludes
-    null and 'Poza stacją'), combined with a native FULL OUTER join —
-    see module docstring for why the reference's UNION workaround is
-    not ported.
+    - ``day``: every ride; with the ride's distance, duration,
+      round_trip and left_outside, it feeds A1 and A3–A8;
+    - ``hour``: key_a = the start hour ('0'..'23');
+    - ``station``: key_a = a station, with departures = 1 (the start
+      at a station) or arrivals = 1 (the end at a station);
+    - ``route``: key_a → key_b, a departure and an arrival at two
+      different stations (reference :156–180).
     """
-    dep = (
-        rides.filter(
-            F.col("start_station").isNotNull()
-            & (F.col("start_station") != OUTSIDE_STATION)
-        )
-        .groupBy(*keys, F.col("start_station").alias("station"))
-        .agg(F.count(F.lit(1)).alias("departures"))
-    )
-    arr = (
-        rides.filter(
-            F.col("end_station").isNotNull()
-            & (F.col("end_station") != OUTSIDE_STATION)
-        )
-        .groupBy(*keys, F.col("end_station").alias("station"))
-        .agg(F.count(F.lit(1)).alias("arrivals"))
-    )
-    return (
-        dep.join(arr, [*keys, "station"], "full_outer")
-        .select(
-            *keys,
-            "station",
-            F.coalesce("arrivals", F.lit(0)).alias("arrivals"),
-            F.coalesce("departures", F.lit(0)).alias("departures"),
-        )
-        .withColumn("total", (F.col("arrivals") + F.col("departures")).cast("long"))
-    )
-
-
-def route_counts(rides: DataFrame, *keys) -> DataFrame:
-    """A12: ride count per ``keys`` (names or columns over the route's
-    ends) over qualifying rides, excluding nulls, round trips, and
-    'Poza stacją' on either end (reference :156–180)."""
     s, e = F.col("start_station"), F.col("end_station")
-    return (
-        rides.filter(
-            s.isNotNull()
-            & e.isNotNull()
-            & (s != e)
-            & (s != OUTSIDE_STATION)
-            & (e != OUTSIDE_STATION)
+    departs, arrives = _at_station(s), _at_station(e)
+    facts = F.array_compact(
+        F.array(
+            _fact("day"),
+            _fact("hour", F.hour("start_time")),
+            F.when(departs, _fact("station", s, departures=1)),
+            F.when(arrives, _fact("station", e, arrivals=1)),
+            F.when(departs & arrives & (s != e), _fact("route", s, e)),
         )
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("rides"))
     )
-
-
-def busiest_stations_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
-    """A9–A11 + K1: per-day top-N stations by arrivals+departures."""
-    combined = station_counts(_filtered(rides), "ride_date")
-    w = Window.partitionBy("ride_date").orderBy(F.desc("total"), F.asc("station"))
-    topn = combined.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= top_n
-    )
+    # O10: the global duration > 2 predicate (strict).
     return (
-        topn.groupBy("ride_date")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("rn", "station", "arrivals", "departures", "total")
-                )
-            ).alias("ranked")
-        )
+        _with_ride_date(rides)
+        .filter(F.col("duration") > 2)
         .select(
             "ride_date",
-            F.transform(
-                "ranked",
-                lambda r: F.struct(
-                    r["station"].alias("station"),
-                    r["arrivals"].cast("long").alias("arrivals"),
-                    r["departures"].cast("long").alias("departures"),
-                    r["total"].alias("total"),
-                ),
-            ).alias("busiest_stations_top5"),
+            "distance",
+            "duration",
+            (s == e).cast("int").alias("round_trip"),
+            (e == OUTSIDE_STATION).cast("int").alias("left_outside"),
+            F.inline(facts),
         )
     )
 
 
-def top_routes_by_day(rides: DataFrame, top_n: int = 5) -> DataFrame:
-    """A12 + K2: per-day top-N (start,end) routes (see route_counts)."""
-    routes = route_counts(_filtered(rides), "ride_date", "start_station", "end_station")
-    w = Window.partitionBy("ride_date").orderBy(
-        F.desc("rides"), F.asc("start_station"), F.asc("end_station")
-    )
-    topn = routes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= top_n)
-    return (
-        topn.groupBy("ride_date")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("rn", "start_station", "end_station", "rides"))
-            ).alias("ranked")
-        )
-        .select(
-            "ride_date",
-            F.transform(
-                "ranked",
-                lambda r: F.struct(
-                    r["start_station"].alias("start_station"),
-                    r["end_station"].alias("end_station"),
-                    r["rides"].alias("rides"),
-                ),
-            ).alias("top_routes_top5"),
-        )
-    )
+def _top5(family: str, *fields: Column) -> Column:
+    """K1/K2: the first 5 of the day's ``family`` facts as ``fields``
+    structs, sorted ascending on the fields in order (``[]`` when there
+    are none)."""
+    listed = F.collect_list(F.when(F.col("family") == family, F.struct(*fields)))
+    return F.slice(F.array_sort(listed), 1, 5)
+
+
+# A3–A8, read on the day family only.
+_DAY_SCALARS = (
+    "avg_distance_km",
+    "avg_duration_min",
+    "total_distance_km",
+    "total_duration_min",
+    "round_trips",
+    "left_outside_station",
+)
 
 
 def compute_all_days(rides: DataFrame, year: int | None = None) -> DataFrame:
     """All metrics for all (or one year's) days — one action, not
-    O(days); AQE runs it as several query-stage jobs, one per shuffle
-    or broadcast stage plus the result (12 on a parquet input: 8 + 3 +
-    1), a count that does not grow with the number of days.
+    O(days); AQE runs it as at most 3 jobs on a parquet input (one per
+    shuffle stage of the two aggregates plus the result), a count that
+    does not grow with the number of days.
 
     Returns one row per ride_date with the full DAILY_METRICS_SCHEMA
-    payload. Each aggregation family is post-aggregation tiny (rows =
-    number of days), so the stitching joins broadcast under AQE.
+    payload.
     """
     if year is not None:
         rides = rides.filter(F.year("start_time") == year)
-    scalars = scalar_metrics_by_day(rides)
-    hist = hourly_histogram_by_day(rides)
-    stations = busiest_stations_by_day(rides)
-    routes = top_routes_by_day(rides)
-    out = (
-        scalars.join(hist, "ride_date", "left")
-        .join(stations, "ride_date", "left")
-        .join(routes, "ride_date", "left")
+    counts = (
+        ride_facts(rides)
+        .groupBy("ride_date", "family", "key_a", "key_b")
+        .agg(
+            F.count(F.lit(1)).alias("rides"),
+            F.sum("departures").alias("departures"),
+            F.sum("arrivals").alias("arrivals"),
+            F.coalesce(F.round(F.avg("distance"), 3), F.lit(0.0)).alias("avg_distance_km"),
+            F.coalesce(F.round(F.sum("distance"), 3), F.lit(0.0)).alias("total_distance_km"),
+            F.coalesce(F.round(F.avg("duration"), 2), F.lit(0.0)).alias("avg_duration_min"),
+            F.coalesce(F.sum("duration"), F.lit(0)).cast("long").alias("total_duration_min"),
+            F.coalesce(F.sum("round_trip"), F.lit(0)).alias("round_trips"),
+            F.coalesce(F.sum("left_outside"), F.lit(0)).alias("left_outside_station"),
+        )
+    )
+    fam, n = F.col("family"), F.col("rides")
+    total = F.col("arrivals") + F.col("departures")
+    hours = F.collect_list(F.when(fam == "hour", F.struct(F.col("key_a").cast("int"), n)))
+    out = counts.groupBy("ride_date").agg(
+        F.max(F.when(fam == "day", n)).alias("total_rides"),
+        F.map_from_entries(F.array_sort(hours)).alias("hist"),
+        *(F.max(F.when(fam == "day", F.col(c))).alias(c) for c in _DAY_SCALARS),
+        # Leading negated counts: count DESC, then the names ASC.
+        _top5("station", -total, "key_a", "arrivals", "departures", total.alias("total")).alias(
+            "stations"
+        ),
+        _top5("route", -n, "key_a", "key_b", n).alias("routes"),
     )
     return out.select(
         F.date_format("ride_date", "yyyy-MM-dd").alias("ride_date"),
         "total_rides",
-        F.coalesce(
-            "bike_rentals_histogram",
-            F.map_from_arrays(
-                F.array().cast("array<string>"), F.array().cast("array<bigint>")
-            ),
-        ).alias("bike_rentals_histogram"),
-        "avg_distance_km",
-        "avg_duration_min",
-        "total_distance_km",
-        "total_duration_min",
-        "round_trips",
-        "left_outside_station",
-        F.coalesce(
-            "busiest_stations_top5",
-            F.array().cast(
-                "array<struct<station:string,arrivals:bigint,departures:bigint,total:bigint>>"
+        F.transform_keys("hist", lambda k, _: k.cast("string")).alias(
+            "bike_rentals_histogram"
+        ),
+        *_DAY_SCALARS,
+        F.transform(
+            "stations",
+            lambda r: F.struct(
+                r["key_a"].alias("station"),
+                r["arrivals"].alias("arrivals"),
+                r["departures"].alias("departures"),
+                r["total"].alias("total"),
             ),
         ).alias("busiest_stations_top5"),
-        F.coalesce(
-            "top_routes_top5",
-            F.array().cast(
-                "array<struct<start_station:string,end_station:string,rides:bigint>>"
+        F.transform(
+            "routes",
+            lambda r: F.struct(
+                r["key_a"].alias("start_station"),
+                r["key_b"].alias("end_station"),
+                r["rides"].alias("rides"),
             ),
         ).alias("top_routes_top5"),
     )
@@ -274,22 +204,8 @@ def compute_daily_metrics(rides: DataFrame, day: str) -> dict[str, Any]:
     partition before any aggregation runs.
     """
     one_day = rides.filter(F.to_date("start_time") == F.lit(day).cast("date"))
-    rows = compute_all_days(one_day).collect()
-    if not rows:
-        return _empty_day_metrics()
-    r = rows[0].asDict(recursive=True)
-    return {
-        "total_rides": r["total_rides"],
-        "bike_rentals_histogram": r["bike_rentals_histogram"],
-        "avg_distance_km": r["avg_distance_km"],
-        "avg_duration_min": r["avg_duration_min"],
-        "total_distance_km": r["total_distance_km"],
-        "total_duration_min": r["total_duration_min"],
-        "round_trips": r["round_trips"],
-        "left_outside_station": r["left_outside_station"],
-        "busiest_stations_top5": r["busiest_stations_top5"],
-        "top_routes_top5": r["top_routes_top5"],
-    }
+    rows = compute_all_days(one_day).drop("ride_date").collect()
+    return rows[0].asDict(recursive=True) if rows else _empty_day_metrics()
 
 
 def _empty_day_metrics() -> dict[str, Any]:

@@ -11,8 +11,8 @@ Faithfulness notes:
 - A17/A18 re-aggregate the stored per-day TOP-5 lists, not base data —
   an *approximation by design* (stations/routes outside a day's top-5
   are invisible); reproduced exactly. Exact variants over base rides
-  share the daily plans' counting (``station_counts`` /
-  ``route_counts``) and are offered alongside, not substituted.
+  count the daily plan's own facts (``ride_facts``) and are offered
+  alongside, not substituted.
 - The reference's JS sort leaves ties in Map-insertion order; the
   engine uses deterministic tie-breaks (total/rides DESC, then name
   ASC) — documented deviation, only visible on exact ties.
@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from wroclaw_bike_stats_spark.plans.daily_metrics import route_counts, station_counts
+from wroclaw_bike_stats_spark.plans.daily_metrics import ride_facts
 
 # The per-day metric keys the UI charts as line series (app.js:141–149).
 SERIES_METRICS = [
@@ -153,14 +153,14 @@ def range_top_routes(
 # A17 note: keep both; the approximate one is the parity surface.
 
 
-def _rides_in_range(rides: DataFrame, start: str, end: str) -> DataFrame:
-    """Qualifying rides (the daily plans' ``duration > 2``) that start
-    in [start, end]."""
-    return rides.filter(
-        (F.to_date("start_time") >= F.lit(start).cast("date"))
-        & (F.to_date("start_time") <= F.lit(end).cast("date"))
-        & (F.col("duration") > 2)
+def _range_facts(rides: DataFrame, start: str, end: str, family: str) -> DataFrame:
+    """``ride_facts`` of ``family`` over the rides that start in
+    [start, end]."""
+    day = F.to_date("start_time")
+    in_range = rides.filter(
+        (day >= F.lit(start).cast("date")) & (day <= F.lit(end).cast("date"))
     )
+    return ride_facts(in_range).filter(F.col("family") == family)
 
 
 def range_busiest_stations_exact(
@@ -169,7 +169,10 @@ def range_busiest_stations_exact(
     """Exact A17: arrivals+departures per station over base rides in
     the range — stations never in a daily top-5 are visible here."""
     return (
-        station_counts(_rides_in_range(rides, start, end))
+        _range_facts(rides, start, end, "station")
+        .groupBy(F.col("key_a").alias("station"))
+        .agg(F.sum("arrivals").alias("arrivals"), F.sum("departures").alias("departures"))
+        .withColumn("total", F.col("arrivals") + F.col("departures"))
         .orderBy(F.desc("total"), F.asc("station"))
         .limit(top_n)
     )
@@ -181,9 +184,10 @@ def range_top_routes_exact(
     """Exact A18: route counts over base rides in the range under the
     F8 label, same exclusions as the daily plan (nulls, round trips,
     'Poza stacją')."""
-    route = route_label(F.col("start_station"), F.col("end_station"))
     return (
-        route_counts(_rides_in_range(rides, start, end), route.alias("route"))
+        _range_facts(rides, start, end, "route")
+        .groupBy(route_label(F.col("key_a"), F.col("key_b")).alias("route"))
+        .agg(F.count(F.lit(1)).alias("rides"))
         .orderBy(F.desc("rides"), F.asc("route"))
         .limit(top_n)
     )

@@ -89,9 +89,11 @@ class StatusChangeStream:
                 return
             events = diff_snapshot_series(combined)
             versioned.write(events, self.events_dir, batch_id, prefix=versioned.BATCH)
-            # New state = the rows of the newest snapshot in this batch.
+            # New state = the rows of the newest snapshot in this batch,
+            # one file: AQE does not coalesce inside the cached union's
+            # plan, and the state is O(fleet).
             latest = combined.filter(F.col("snapshot_ts") == latest_ts)
-            versioned.write(latest, self.state_dir, batch_id)
+            versioned.write(latest.coalesce(1), self.state_dir, batch_id)
         finally:
             combined.unpersist()
         # The newest version and its predecessor, which a retry of this
