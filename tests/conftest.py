@@ -20,6 +20,23 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def job_count(spark):
+    """``job_count(group, action)``: how many Spark jobs ``action()``
+    runs, counted under the job group ``group``."""
+    sc = spark.sparkContext
+
+    def count(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="module")
 def bike_series(tmp_path_factory):
     """(truth, snapshot paths oldest first) of one seeded bikegen series:

@@ -1,4 +1,4 @@
-"""Driver-side ingest utilities (S1–S4, S10, F10, F11, K4–K5) and the
+"""Driver-side ingest utilities (S1–S4, S10, F10, F11, K4) and the
 CLI surface (§3) — all network access injected, nothing leaves the
 machine."""
 
@@ -9,7 +9,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from wroclaw_bike_stats_spark import ingest
 from wroclaw_bike_stats_spark.cli import main as cli_main
@@ -41,26 +40,6 @@ def test_extract_dt_from_filename():
     ) == dt.datetime(2024, 6, 5)
     assert ingest.extract_dt_from_filename("no_date_here.csv") is None
     assert ingest.extract_dt_from_filename("x_2024-13-45.csv") is None
-
-
-def test_filename_datetime_col(spark):
-    """F10 as a distributed expression: same results as the driver
-    parser, including the no-time default and no-match → NULL."""
-    names = [
-        ("Historia_przejazdow_2025-8-18_18_29_14.csv",),
-        ("Historia_przejazdow_2024-6-5.csv",),
-        ("no_date_here.csv",),
-    ]
-    df = spark.createDataFrame(names, ["name"])
-    got = [
-        r["ts"]
-        for r in df.select(
-            ingest.filename_datetime_col(F.col("name")).alias("ts")
-        ).collect()
-    ]
-    assert got[0] == dt.datetime(2025, 8, 18, 18, 29, 14)
-    assert got[1] == dt.datetime(2024, 6, 5)
-    assert got[2] is None
 
 
 # --- S1 / S2 / S4 -----------------------------------------------------------
@@ -159,26 +138,6 @@ def test_fetch_snapshot_injects_fetched_at(tmp_path):
     # Europe/Warsaw in January is UTC+1
     assert doc["_fetched_at"] == "2025-01-02T04:04:05+01:00"
     assert os.path.basename(path) == "bike_rides_2025-01-02_04_04_05.json"
-
-
-def test_latest_snapshot_files_by_embedded_ts(tmp_path):
-    """S12/K5: sorted by embedded _fetched_at, not filename; unreadable
-    JSON skipped (reference tests/test_bike_status_changes.py:65–73)."""
-    (tmp_path / "bike_rides_a.json").write_text(
-        json.dumps({"_fetched_at": "2025-01-01T00:00:01"}), encoding="utf-8"
-    )
-    (tmp_path / "bike_rides_b.json").write_text(
-        json.dumps({"_fetched_at": "2025-01-01T00:00:03"}), encoding="utf-8"
-    )
-    (tmp_path / "bike_rides_c.json").write_text(
-        json.dumps({"_fetched_at": "2025-01-01T00:00:02"}), encoding="utf-8"
-    )
-    (tmp_path / "bike_rides_bad.json").write_text("{not json", encoding="utf-8")
-    latest = ingest.latest_snapshot_files(str(tmp_path), 2)
-    assert [os.path.basename(p) for p in latest] == [
-        "bike_rides_c.json",
-        "bike_rides_b.json",
-    ]
 
 
 # --- CLI --------------------------------------------------------------------

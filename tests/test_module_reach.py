@@ -1,7 +1,20 @@
-"""Every package module earns a caller outside tests: a static import
-walk (plain ``ast``, no Spark session) from the program's entry points
-reaches every module under ``wroclaw_bike_stats_spark/``, except the
-ones kept below with a reason."""
+"""Every package module and every top-level definition earns a caller
+outside tests. A static walk (plain ``ast``, no Spark session) starts
+at the program's entry points:
+
+- a module is reached when an entry point or a reached module imports
+  it, function bodies included (the package imports lazily);
+- a top-level ``def``/``class`` of a reached module is reached when
+  reached code names it outside the definition's own body: an entry
+  point, a reached module's top-level statements, or the body of a
+  definition already reached. Names that appear only inside unreached
+  definitions do not count, so an orphaned private helper shows too.
+
+Names match by spelling alone: a plain name, an attribute, an imported
+name or an ``__all__`` entry. That errs towards "reached", never the
+other way, and the package looks up none of its own definitions
+through ``getattr`` or ``globals()``. What stays unreached is kept
+below with a reason."""
 
 from __future__ import annotations
 
@@ -21,11 +34,28 @@ ENTRY_POINTS = [
     *sorted((ROOT / "perfbench").glob("*.py")),
 ]
 
-# Modules no entry point reaches that stay for now, each with its reason.
-KEPT_UNREACHED = {
-    f"{PKG}.catalog": "ROADMAP B: the rides table's new layout decides it",
-    f"{PKG}.operators.maintenance": "ROADMAP B: reused for file-set compaction",
+# Modules (dotted name) and definitions (``module.name``) no entry point
+# reaches that stay, each with its reason.
+KEPT = {
+    f"{PKG}.operators.snapshot_diff.diff_snapshot_pair": (
+        "the reference's pairwise diff; tests check the series diff "
+        "against it"
+    ),
+    f"{PKG}.plans.range_metrics.range_busiest_stations_exact": (
+        "SURVEY Phase 4 exact range variant; ROADMAP E gives it a caller"
+    ),
+    f"{PKG}.plans.range_metrics.range_top_routes_exact": (
+        "SURVEY Phase 4 exact range variant; ROADMAP E gives it a caller"
+    ),
+    f"{PKG}.plans.range_metrics._range_facts": (
+        "the shared body of the two exact range variants above"
+    ),
+    f"{PKG}.plans.range_metrics.nearest_available_date": (
+        "SURVEY §2.5's as-of date lookup of the UI's range views"
+    ),
 }
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _module_file(name: str) -> Path | None:
@@ -44,11 +74,14 @@ def _with_packages(name: str) -> set[str]:
     return {p for p in prefixes if _module_file(p)}
 
 
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), str(path))
+
+
 def _imports(path: Path) -> set[str]:
-    """Package modules ``path`` imports anywhere in its code, function
-    bodies included (the package imports lazily)."""
+    """Package modules ``path`` imports anywhere in its code."""
     names = set()
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom) and node.module:
@@ -79,11 +112,71 @@ def _package_modules() -> set[str]:
     return out
 
 
+def _names(node: ast.AST) -> set[str]:
+    """Every name ``node`` spells: plain names, attributes, imported
+    names and ``__all__`` entries."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+        elif (
+            isinstance(n, ast.Assign)
+            and any(getattr(t, "id", None) == "__all__" for t in n.targets)
+            and isinstance(n.value, (ast.List, ast.Tuple))
+        ):
+            out.update(e.value for e in n.value.elts)
+    return out
+
+
+def _unreached_definitions(modules: set[str]) -> set[str]:
+    """``module.name`` of each top-level definition of ``modules`` that
+    reached code does not name, walked to a fixpoint."""
+    named: set[str] = set()
+    for path in ENTRY_POINTS:
+        if not path.is_relative_to(ROOT / PKG):
+            named |= _names(_parse(path))
+    pending = {}
+    for mod in modules:
+        for stmt in _parse(_module_file(mod)).body:
+            if isinstance(stmt, _DEFS):
+                pending[f"{mod}.{stmt.name}"] = stmt
+            else:
+                named |= _names(stmt)
+    grew = True
+    while grew:
+        grew = False
+        for qual, stmt in list(pending.items()):
+            if stmt.name in named:
+                named |= _names(stmt)
+                del pending[qual]
+                grew = True
+    return set(pending)
+
+
+def _kept_modules() -> set[str]:
+    return {k for k in KEPT if _module_file(k)}
+
+
 def test_every_package_module_is_reached_outside_tests():
     unreached = _package_modules() - _reached()
-    assert unreached == set(KEPT_UNREACHED), (
+    kept = _kept_modules()
+    assert unreached == kept, (
         "modules only tests import (delete them, give them a caller, or "
-        "keep them in KEPT_UNREACHED with a reason): "
-        f"{sorted(unreached - set(KEPT_UNREACHED))}; kept modules that "
-        f"gained a caller: {sorted(set(KEPT_UNREACHED) - unreached)}"
+        f"keep them in KEPT with a reason): {sorted(unreached - kept)}; "
+        f"kept modules that gained a caller: {sorted(kept - unreached)}"
+    )
+
+
+def test_every_package_definition_is_reached_outside_tests():
+    unreached = _unreached_definitions(_reached())
+    kept = set(KEPT) - _kept_modules()
+    assert unreached == kept, (
+        "definitions no reached code names (delete them, give them a "
+        f"caller, or keep them in KEPT with a reason): "
+        f"{sorted(unreached - kept)}; kept definitions that gained a "
+        f"caller or are gone: {sorted(kept - unreached)}"
     )

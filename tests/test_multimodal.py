@@ -1,9 +1,9 @@
 """Multimodal binary-column plumbing: Arrow-batched feature
-extraction, resize, and video frame sampling. Uncompressed formats
+extraction. Uncompressed formats
 (24-bit BMP, PCM WAV) decode for REAL via stdlib decoders; compressed
 formats still use deterministic fakes (no codec libs in this
-runtime), with the Spark-side schema/batch/fan-out shapes real in
-both cases."""
+runtime), with the Spark-side schema/batch shapes real in both
+cases."""
 
 from __future__ import annotations
 
@@ -11,11 +11,8 @@ import pytest
 
 from wroclaw_bike_stats_spark.operators.multimodal import (
     ASSET_SCHEMA,
-    asset_metadata_stats,
     decode_image_real,
     extract_features,
-    resize_images,
-    sample_frames,
 )
 
 
@@ -39,50 +36,6 @@ def test_extract_features_deterministic(assets):
     assert all(len(v) == 8 for v in a.values())
     # different payloads → different fake features
     assert a[1] != a[2]
-
-
-def test_resize_only_touches_images(assets):
-    out = {r["asset_id"]: r for r in resize_images(assets, 64, 64).collect()}
-    assert out[1]["width"] == 64 and out[1]["height"] == 64
-    assert out[2]["width"] == 64 and out[2]["height"] == 64
-    assert out[1]["payload"] != out[2]["payload"]  # digest-derived
-    # non-images pass through untouched
-    assert out[3]["payload"] == b"audiobytes-3"
-    assert out[4]["width"] == 1280
-
-
-def test_sample_frames_fanout(assets):
-    frames = sample_frames(assets, fps=2.0).collect()
-    by_asset = {}
-    for r in frames:
-        by_asset.setdefault(r["asset_id"], []).append(r)
-    # 3.0s at 2fps → int(6)+1 = 7 frames; 0.0s → 1 frame; non-video none
-    assert len(by_asset[4]) == 7
-    assert len(by_asset[5]) == 1
-    assert set(by_asset) == {4, 5}
-    f = sorted(by_asset[4], key=lambda r: r["frame_idx"])
-    assert [r["ts_s"] for r in f] == [0.0, 0.5, 1.0, 1.5, 2.0, 2.5, 3.0]
-    # distinct timestamps → distinct fake frames
-    assert len({bytes(r["frame"]) for r in f}) == 7
-
-
-def test_metadata_stats_never_reads_payload(spark, assets, tmp_path):
-    """Column pruning must reach the parquet scan: the metadata-only
-    aggregate's ReadSchema excludes the binary payload column."""
-    path = str(tmp_path / "assets.parquet")
-    assets.write.parquet(path)
-    on_disk = spark.read.parquet(path)
-    plan = (
-        asset_metadata_stats(on_disk)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all("payload" not in ln for ln in read_schema)
-    rows = {r["media_type"]: r for r in asset_metadata_stats(assets).collect()}
-    assert rows["image"]["n_assets"] == 2
-    assert rows["video"]["avg_duration_s"] == pytest.approx(1.5)
 
 
 def _golden_bmp(width=4, height=3, top_down=False) -> bytes:

@@ -263,10 +263,15 @@ def test_segment_repetition_paragraph_mode_and_filter(spark):
     assert got[1].n_segments == 3 and got[1].dup_seg_frac > 0.3
     assert got[2].n_segments == 3 and got[2].dup_seg_frac == 0.0
 
+    # the composed filter with only the paragraph rules binding
     kept = {
         r.doc_id
-        for r in T.segment_repetition_filter(
-            df, sep_pattern=r"\n{2,}"
+        for r in T.gopher_repetition_filter(
+            df,
+            max_dup_line_frac=1.0,
+            max_dup_line_char_frac=1.0,
+            max_top_ngram_share={},
+            max_dup_ngram_char_frac={},
         ).collect()
     }
     assert kept == {2}
@@ -365,7 +370,9 @@ def test_dup_ngram_char_fracs_overlap_aware(spark):
         ],
         "doc_id long, text string",
     )
-    fr = T.dup_ngram_char_fracs(F.col("text"), ns=(2,))
+    fr = T.gopher_repetition_signals(
+        F.col("text"), top_ns=(), mask_ns=(2,)
+    ).getField("dup_char_fracs")
     got = {r.doc_id: r.f[0] for r in df.select("doc_id", fr.alias("f")).collect()}
     assert got[1] == 1.0
     assert got[2] == pytest.approx(5 / 13, abs=1e-4)

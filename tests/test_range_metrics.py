@@ -74,6 +74,27 @@ def test_range_histogram_avg(daily):
     assert all(got[str(h)] == 0 for h in range(24) if h not in (0, 10, 13, 14))
 
 
+@pytest.mark.parametrize(
+    "start,end",
+    [("2025-04-01", "2025-04-30"), ("2025-04-07", "2025-04-07"), ("2025-05-01", "2025-05-31")],
+    ids=["both-days", "one-day", "empty"],
+)
+def test_range_histogram_avg_job_count(daily, job_count, start, end):
+    """A16 is one aggregate over the cached daily table, its hours
+    folded from the collected maps: at most 2 jobs, 24 rows in hour
+    order, zero-filled even when the range holds no day."""
+    daily.count()
+    rows = []
+    jobs = job_count(
+        f"histogram-{start}-{end}",
+        lambda: rows.extend(range_histogram_avg(daily, start, end).collect()),
+    )
+    assert 0 < jobs <= 2, jobs
+    assert [r["hour"] for r in rows] == [str(h) for h in range(24)]
+    if start == "2025-05-01":
+        assert all(r["avg_rentals"] == 0 for r in rows)
+
+
 def test_range_busiest_stations_reaggregates_top5(daily):
     """A17: sums per-day top-5 entries per station. Day 7 (duration>2
     rides only — the C→D ride has duration 2 and is excluded;

@@ -156,20 +156,6 @@ def test_incremental_equals_full_on_id_ordered_split(spark):
     }
     assert inc == full and inc  # non-vacuous: sf0.001 has dup windows
 
-    spans_inc = {
-        (r.doc_id, r.span_start, r.span_end, r.n_sites)
-        for r in S.duplicate_spans_incremental(new, idx, k=13).collect()
-    }
-    spans_full = {
-        (r.doc_id, r.span_start, r.span_end, r.n_sites)
-        for r in S.duplicate_spans(docs, k=13)
-        .filter(F.col("doc_id") >= 25)
-        .collect()
-    }
-    # detection spans agree; n_sites counts only new-batch sites on
-    # the incremental side, so compare positions
-    assert {t[:3] for t in spans_inc} == {t[:3] for t in spans_full}
-
 
 def test_incremental_strips_all_corpus_resident_occurrences(spark):
     """Content already in the resident corpus is stripped from EVERY
@@ -205,25 +191,6 @@ def test_incremental_batch_internal_dups_keep_first(spark):
         for r in S.strip_duplicate_spans_incremental(new, idx, k=K).collect()
     }
     assert got == {10: ("a b c d e", 0), 11: ("", 5)}
-
-
-def test_merge_window_index_is_monoid_fold(spark):
-    """index(A ∪ B) == merge(index(A), index(B)) — counts add,
-    canonicals take the min."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = {
-        (r.h, r.cnt, r.canon_id, r.canon_pos)
-        for r in S.merge_window_index(
-            S.window_index(a, k=13), S.window_index(b, k=13)
-        ).collect()
-    }
-    whole = {
-        (r.h, r.cnt, r.canon_id, r.canon_pos)
-        for r in S.window_index(docs, k=13).collect()
-    }
-    assert merged == whole
 
 
 def test_index_metadata_guard_rejects_mismatched_k(spark):
@@ -548,27 +515,6 @@ def test_strip_with_index_matches_full(spark):
     assert via_auto_nat == full
 
 
-def test_merge_window_index_arrow_family(spark):
-    """merge_window_index folds arrow-family indexes (r14): counts
-    add, canonicals min, scheme metadata survives; mixing families
-    refuses."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-    ia = S.window_index(a, k=5, site_route="arrow")
-    ib = S.window_index(b, k=5, site_route="arrow")
-    merged = S.merge_window_index(ia, ib)
-    assert merged.schema["h"].metadata["span_scheme"] == S.ARROW_SPAN_SCHEME
-    whole = S.window_index(docs, k=5, site_route="arrow")
-    got = {
-        (r.h, r.cnt, r.canon_id, r.canon_pos) for r in merged.collect()
-    }
-    want = {
-        (r.h, r.cnt, r.canon_id, r.canon_pos) for r in whole.collect()
-    }
-    assert got == want
-
-
 def test_broadcast_dups_auto_routes_both_ways(spark):
     """r15 (r14 VERDICT task 3): broadcast_dups='auto' asks the
     standing index for the cnt>=2 verdict-set size — a generous
@@ -607,26 +553,3 @@ def test_broadcast_dups_auto_routes_both_ways(spark):
     )
     assert "ResolvedHint" not in analyzed(sh)
     assert sorted(map(tuple, sh.collect())) == full
-
-
-def test_merge_window_index_rejects_unknown_scheme(spark):
-    """r14 ADVICE: an unknown/corrupt span_scheme string must refuse
-    even when both sides agree on it — agreement alone is a tautology
-    against a corrupted store."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    idx = S.window_index(docs, k=5)
-    bad_meta = {"span_k": 5, "span_scheme": "ws-token-corrupt-v9"}
-    bad = idx.select(
-        F.col("h").alias("h", metadata=bad_meta),
-        "cnt", "canon_id", "canon_pos",
-    )
-    with pytest.raises(ValueError, match="known hash family"):
-        S.merge_window_index(bad, bad)
-    # mixing known families still refuses on the agreement check
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 == 1)
-    with pytest.raises(ValueError, match="parameterizations differ"):
-        S.merge_window_index(
-            S.window_index(a, k=5, site_route="arrow"),
-            S.window_index(b, k=5),
-        ).collect()

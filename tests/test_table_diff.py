@@ -6,11 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wroclaw_bike_stats_spark.operators.profile import skew_report, validate
-from wroclaw_bike_stats_spark.operators.table_diff import (
-    changed_rows,
-    diff_summary,
-    table_diff,
-)
+from wroclaw_bike_stats_spark.operators.table_diff import table_diff
 
 
 def test_table_diff_classes(spark):
@@ -44,17 +40,6 @@ def test_table_diff_null_is_content_not_wildcard(spark):
     )
     got = table_diff(old, new, "k").collect()
     assert got[0].change == "changed"
-
-
-def test_changed_rows_is_cdc_payload(spark):
-    old = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "s"])
-    new = spark.createDataFrame([(1, "a"), (2, "B"), (3, "c")], ["k", "s"])
-    got = sorted((r.k, r.s) for r in changed_rows(old, new, "k").collect())
-    assert got == [(2, "B"), (3, "c")]
-    summary = {
-        r.change: r.n_keys for r in diff_summary(old, new, "k").collect()
-    }
-    assert summary == {"added": 1, "changed": 1, "unchanged": 1}
 
 
 def test_skew_report_shares(spark):

@@ -1,5 +1,5 @@
 """Driver-side ingest utilities (SURVEY.md §2.1 S1–S4, S10; §2.8
-F10–F11; §2.6 K4–K6).
+F10–F11; §2.6 K4, K6).
 
 Discovery/download/fetch are inherently driver-side (network +
 landing-zone filesystem), so these are plain functions, not Spark
@@ -9,11 +9,7 @@ deliberate:
 
 - stdlib only (urllib + html.parser) — no requests/bs4 dependency;
 - every network call goes through an injectable ``fetch`` callable so
-  tests (and air-gapped runs) never touch the network;
-- F10 also ships as a Spark column expression
-  (``filename_datetime_col``) so a *distributed* backfill over a
-  landing directory can derive file datetimes via
-  ``input_file_name()`` instead of a driver loop.
+  tests (and air-gapped runs) never touch the network.
 """
 
 from __future__ import annotations
@@ -27,9 +23,6 @@ from html.parser import HTMLParser
 from typing import Callable
 from urllib.parse import urljoin, urlparse
 from urllib.request import Request, urlopen
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # F10: the reference's filename-datetime regex, verbatim semantics
 # (reference: src/data_load_sqlite.py:47–58) — date part mandatory,
@@ -57,27 +50,6 @@ def extract_dt_from_filename(name: str) -> dt.datetime | None:
         return dt.datetime(int(y), int(mo), int(d))
     except ValueError:
         return None
-
-
-def filename_datetime_col(name_col: Column) -> Column:
-    """F10 as a native expression for distributed use, e.g.
-    ``filename_datetime_col(F.input_file_name())`` — regexp_extract ×6
-    + make_timestamp; missing time parts default to 00:00:00, no-match
-    filenames → NULL (make_timestamp of nulls)."""
-    parts = [F.regexp_extract(name_col, FILENAME_DT_RE, i) for i in range(1, 7)]
-    date_ok = parts[0] != ""
-    with_time = parts[3] != ""
-    num = [
-        F.when(date_ok, p.cast("int")).otherwise(F.lit(None).cast("int"))
-        for p in parts[:3]
-    ]
-    tnum = [
-        F.when(date_ok & with_time, p.cast("int")).otherwise(
-            F.when(date_ok, F.lit(0)).otherwise(F.lit(None).cast("int"))
-        )
-        for p in parts[3:]
-    ]
-    return F.make_timestamp(*num, *tnum)
 
 
 def pick_latest_csv(csv_urls: list[str]) -> tuple[str | None, str | None]:
@@ -216,25 +188,3 @@ def fetch_snapshot(
     with open(path, "w", encoding="utf-8") as f:
         json.dump(payload, f, ensure_ascii=False, indent=2)
     return path
-
-
-def latest_snapshot_files(landing_dir: str, count: int = 2) -> list[str]:
-    """S12/K5: the ``count`` most recent snapshot files by their
-    *embedded* ``_fetched_at`` (not filename), skipping unreadable
-    JSON (reference: src/bike_status_changes.py:88–103). The batch
-    engine reads all snapshots; this utility exists for latest-pair
-    parity runs."""
-    dated = []
-    for name in sorted(os.listdir(landing_dir)):
-        if not (name.startswith("bike_rides_") and name.endswith(".json")):
-            continue
-        path = os.path.join(landing_dir, name)
-        try:
-            with open(path, encoding="utf-8") as f:
-                fetched = json.load(f).get("_fetched_at")
-        except (OSError, json.JSONDecodeError):
-            continue
-        if fetched is not None:
-            dated.append((fetched, path))
-    dated.sort(key=lambda x: x[0])
-    return [p for _, p in dated[-count:]]

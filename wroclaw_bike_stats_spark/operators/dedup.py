@@ -23,7 +23,7 @@ import pandas as pd  # noqa: F401 - resolves pandas_udf type hints
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wroclaw_bike_stats_spark.operators.text import fingerprint_md5, tokens
+from wroclaw_bike_stats_spark.operators.text import fingerprint_md5
 
 # Persisted intermediates (shingle tables, LSH candidate sets) are
 # scratch: needed while the query that built them executes, dead
@@ -56,25 +56,11 @@ def exact_dedup(
     )
 
 
-def word_shingles(col, n: int = 3):
-    """Word n-gram shingle array (native expression).
-
-    slice() is 1-indexed; sequence(1, len-n+1) enumerates start
-    positions; short docs (< n tokens) get a single whole-doc shingle.
-    """
-    toks = tokens(F.lower(col))
-    n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-
-
 def _make_shingle_udf(n: int):
-    """Arrow-batched distinct word-shingle arrays. Semantically equal
-    to ``array_distinct(word_shingles(...))`` but vectorized — the
-    native form pays the interpreted higher-order-function evaluator
-    ~|shingles| expression evals per row (see _make_minhash_udf)."""
+    """Arrow-batched distinct word-shingle arrays (``_py_shingles``
+    per row). A native ``transform``/``slice`` form would pay the
+    interpreted higher-order-function evaluator ~|shingles|
+    expression evals per row (see _make_minhash_udf)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -357,14 +343,14 @@ def ngram_jaccard_pairs(
 
 
 def _py_shingles(text: str | None, n: int) -> set[str]:
-    """Python mirror of ``word_shingles`` semantics (lowercase,
-    whitespace tokens, n-grams joined by space, distinct, short docs →
-    one whole-doc shingle).
+    """Word n-gram shingles of one document: lowercase, whitespace
+    tokens, n-grams joined by space, distinct, short docs → one
+    whole-doc shingle.
 
     re.ASCII keeps ``\\s`` ASCII-only, matching Java regex and
     DuckDB/RE2 — Python's default unicode ``\\s`` also matches NBSP
     and friends, which would silently shift shingle boundaries vs the
-    JVM expression and the oracle on non-ASCII whitespace."""
+    oracle on non-ASCII whitespace."""
     import re as _re
 
     # strip(" ") not strip(): JVM/DuckDB trim() removes spaces only

@@ -29,7 +29,6 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -172,102 +171,6 @@ def decode_image_real(payload: bytes) -> list[float]:
     ]
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("duration_s", DoubleType()),
-    ]
-)
-
-
-def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for a real image resize: output bytes
-    derived from (payload digest, target dims) with size proportional
-    to the target area — preserves the real operator's shape (bytes →
-    smaller bytes) without a decoder."""
-    seed = hashlib.sha256(
-        (payload or b"") + f":{width}x{height}".encode()
-    ).digest()
-    out_len = max(width * height // 64, 1)
-    return (seed * (out_len // len(seed) + 1))[:out_len]
-
-
-def resize_images(
-    assets: DataFrame,
-    width: int,
-    height: int,
-    resize_fn: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize every image asset via Arrow-batched ``mapInPandas``;
-    non-image rows pass through untouched. ``resize_fn=None`` uses the
-    deterministic fake (no decoder in this runtime); a PIL/cv2-backed
-    function plugs in unchanged."""
-    fn = resize_fn or _fake_resize
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            is_img = pdf["media_type"] == "image"
-            pdf = pdf.copy()
-            pdf.loc[is_img, "payload"] = pdf.loc[is_img, "payload"].map(
-                lambda b: fn(b or b"", width, height)
-            )
-            pdf.loc[is_img, "width"] = width
-            pdf.loc[is_img, "height"] = height
-            yield pdf[[f.name for f in RESIZED_SCHEMA.fields]]
-
-    return assets.mapInPandas(_batches, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("ts_s", DoubleType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    assets: DataFrame,
-    fps: float = 1.0,
-    max_frames: int = 32,
-    extract_fn: Callable[[bytes, float], bytes] | None = None,
-) -> DataFrame:
-    """Sample frames from video assets at ``fps`` — the fan-out shape
-    (1 input row → N frame rows) of a real ffmpeg frame extractor,
-    expressed as ``mapInPandas`` yielding multiple output rows per
-    input. Frame count derives from the ``duration_s`` metadata;
-    ``extract_fn(payload, ts) -> frame_bytes`` is stubbed with a
-    deterministic fake when no decoder is available."""
-    fn = extract_fn or (
-        lambda b, ts: hashlib.sha256(
-            (b or b"") + f"@{ts:.3f}".encode()
-        ).digest()
-    )
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"asset_id": [], "frame_idx": [], "ts_s": [], "frame": []}
-            for _, r in pdf[pdf["media_type"] == "video"].iterrows():
-                duration = r["duration_s"] or 0.0
-                n = min(int(duration * fps) + 1, max_frames)
-                for i in range(n):
-                    ts = i / fps
-                    rows["asset_id"].append(r["asset_id"])
-                    rows["frame_idx"].append(i)
-                    rows["ts_s"].append(ts)
-                    rows["frame"].append(fn(r["payload"], ts))
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(_batches, FRAME_SCHEMA)
-
-
 def decode_wav(payload: bytes):
     """Pure-stdlib decoder for PCM WAV (8/16/32-bit integer): returns
     (samples, sample_rate) where ``samples`` is a float64 array in
@@ -323,14 +226,3 @@ def decode_audio_real(payload: bytes) -> list[float]:
         float(x.mean()),
         float(x.std()),
     ]
-
-
-def asset_metadata_stats(assets: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — never touches the payload column
-    (column pruning keeps the binary bytes unread on disk)."""
-    return assets.groupBy("media_type").agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        F.avg("duration_s").alias("avg_duration_s"),
-        F.max("width").alias("max_width"),
-        F.max("height").alias("max_height"),
-    )

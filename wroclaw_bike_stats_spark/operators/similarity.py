@@ -785,27 +785,3 @@ def quantize_embeddings(
     """
     q = _make_quantize_udf()(F.col(vec_col))
     return corpus.select(F.col(id_col), q.alias(out))
-
-
-def hyperplane_buckets(
-    corpus: DataFrame,
-    num_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector (SimHash for
-    cosine): bit i = sign(dot(v, h_i)) with h_i a deterministic
-    seeded hyperplane embedded as plan literals.
-
-    Single-bucket variant (all bits must agree) — only near-identical
-    vectors collide; for threshold-tunable recall use the banded form
-    (``hyperplane_band_candidates``). Candidate pairs come from a
-    groupBy on bucket instead of a cross join.
-    """
-    # one band spanning all planes → the packed bits ARE the bucket id
-    bucket = _make_band_hash_udf(num_planes, bands=1)(F.col(vec_col))
-    return corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.element_at(bucket, 1).alias("bucket"),
-    )

@@ -545,8 +545,9 @@ def window_index(
     parquet footer, so a stored index carries its own provenance and
     the incremental operators validate compatibility with a zero-job
     schema check (same contract as ``dedup.minhash_band_table``).
-    One groupBy(hash) shuffle to build; maintain after each ingest
-    with ``merge_window_index``.
+    One groupBy(hash) shuffle to build; a store of per-batch parts
+    is re-aggregated by the same monoid
+    (``curate_stream.read_window_index_store``).
 
     ``site_route`` (r14): ``"native"`` (default — the scheme the
     incremental operators probe, ``SPAN_SCHEME``) or ``"arrow"``
@@ -583,53 +584,6 @@ def window_index(
         F.col("h").alias(
             "h", metadata={"span_k": k, "span_scheme": scheme}
         ),
-        "cnt",
-        F.col("_canon._id").alias("canon_id"),
-        F.col("_canon.pos").alias("canon_pos"),
-    )
-
-
-def merge_window_index(old_index: DataFrame, new_index: DataFrame) -> DataFrame:
-    """Fold a new batch's ``window_index`` into the stored one —
-    (count, canonical-site) is a monoid, so maintenance is one
-    groupBy over the union: counts add, canonicals take the min.
-    Both sides must carry the same parameterization metadata from a
-    KNOWN hash family (either one — the merge additionally requires
-    the two inputs AGREE; an unknown/corrupt scheme string refuses
-    even when both sides carry it, r14 ADVICE)."""
-    known = {SPAN_SCHEME, ARROW_SPAN_SCHEME}
-    ma = old_index.schema["h"].metadata if "h" in old_index.columns else {}
-    mb = new_index.schema["h"].metadata if "h" in new_index.columns else {}
-    for what, m in (("old_index", ma), ("new_index", mb)):
-        scheme = m.get("span_scheme")
-        if scheme is not None and scheme not in known:
-            raise ValueError(
-                f"{what} span_scheme {scheme!r} is not a known hash "
-                f"family ({sorted(known)}) — corrupt or from a newer "
-                "writer; refusing to merge."
-            )
-    _check_index_meta(
-        old_index, None, what="old_index",
-        scheme=ma.get("span_scheme") or SPAN_SCHEME,
-    )
-    _check_index_meta(
-        new_index, None, what="new_index",
-        scheme=mb.get("span_scheme") or SPAN_SCHEME,
-    )
-    if ma != mb:
-        raise ValueError(
-            f"window_index parameterizations differ: {ma!r} vs {mb!r}"
-        )
-    merged = (
-        old_index.unionByName(new_index)
-        .groupBy("h")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min(F.struct(F.col("canon_id").alias("_id"), F.col("canon_pos").alias("pos"))).alias("_canon"),
-        )
-    )
-    return merged.select(
-        F.col("h").alias("h", metadata={**ma}),
         "cnt",
         F.col("_canon._id").alias("canon_id"),
         F.col("_canon.pos").alias("canon_pos"),
@@ -835,31 +789,6 @@ def strip_duplicate_spans_with_index(
     )
 
 
-def duplicate_spans_incremental(
-    new: DataFrame,
-    old_index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 13,
-    broadcast_new: bool = True,
-) -> DataFrame:
-    """Day-N span detection: maximal duplicated spans in the NEW
-    batch only, where duplication counts occurrences across the
-    resident corpus (via its stored ``window_index``) AND within the
-    batch. Same output shape as ``duplicate_spans``; ``n_sites``
-    counts the batch's own sites in the span (the corpus-resident
-    occurrences live in the index as counts, not positions). The
-    corpus is touched only by one streamed scan of the stored
-    index."""
-    _check_index_meta(old_index, k)
-    sites = _incremental_sites(
-        new, old_index, text_col, id_col, k, broadcast_new
-    )
-    return _merge_spans(
-        sites.filter("_dup").select("_id", "pos"), k
-    ).select(F.col("_id").alias(id_col), "span_start", "span_end", "n_sites")
-
-
 def strip_duplicate_spans_incremental(
     new: DataFrame,
     old_index: DataFrame,
@@ -875,9 +804,10 @@ def strip_duplicate_spans_incremental(
     of batch-new content. Same output shape as
     ``strip_duplicate_spans``; equivalence to the full-corpus run
     restricted to new docs is pinned in tests. After the batch is
-    admitted, fold its ``window_index`` into the stored one with
-    ``merge_window_index`` — per-ingest cost stays proportional to
-    the batch plus one narrow index scan, never corpus re-hashing."""
+    admitted, append its ``window_index`` to the store as a new part
+    (``curate_stream.read_window_index_store`` folds the parts) —
+    per-ingest cost stays proportional to the batch plus one narrow
+    index scan, never corpus re-hashing."""
     _check_index_meta(old_index, k)
     sites = _incremental_sites(
         new, old_index, text_col, id_col, k, broadcast_new

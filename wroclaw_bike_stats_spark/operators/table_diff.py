@@ -63,30 +63,3 @@ def table_diff(
         .otherwise(F.lit("changed"))
         .alias("change"),
     )
-
-
-def diff_summary(old: DataFrame, new: DataFrame, key: str,
-                 compare_cols: list[str] | None = None) -> DataFrame:
-    """Aggregate counts per change class (tiny result)."""
-    return (
-        table_diff(old, new, key, compare_cols)
-        .groupBy("change")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_keys"))
-        .orderBy("change")
-    )
-
-
-def changed_rows(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """The CDC payload: NEW-version rows for keys that are added or
-    changed — what an incremental consumer must re-process. Broadcast
-    is wrong here (the diff set can be as large as the table), so it
-    rides the same keyed shuffle as the diff."""
-    d = table_diff(old, new, key, compare_cols).filter(
-        F.col("change").isin("added", "changed")
-    )
-    return new.join(d.select(key), key, "left_semi")

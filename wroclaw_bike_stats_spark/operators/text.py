@@ -812,19 +812,6 @@ def gopher_repetition_signals(
     ).asNondeterministic()(col)
 
 
-def dup_ngram_char_fracs(col: Column, ns: tuple = (5, 6, 7, 8, 9, 10)) -> Column:
-    """Gopher's duplicate-n-gram CHARACTER fractions (Rae et al.
-    2021 gate n=5..10 at 0.15/0.14/0.13/0.12/0.11/0.10): for each n,
-    the fraction of the document's characters covered by n-grams
-    that occur more than once — OVERLAP-AWARE (a character under two
-    different duplicated n-grams counts once: the paper's definition,
-    which is why this is not expressible as a groupBy/count). Thin
-    wrapper over the fused ``gopher_repetition_signals`` pass."""
-    return gopher_repetition_signals(col, top_ns=(), mask_ns=ns).getField(
-        "dup_char_fracs"
-    )
-
-
 def _half_up4_s(x: float) -> float:
     """Scalar twin of ``_half_up4``: HALF_UP round to 4 dp matching
     Spark's ``F.round`` (BigDecimal shortest-decimal HALF_UP) on a
@@ -1087,28 +1074,6 @@ def _segment_dup_exprs(text_col: str, sep_pattern: str) -> tuple:
         chars > 0, (chars - first_chars).cast("double") / chars
     ).otherwise(F.lit(0.0))
     return dup_frac, dup_char_frac, n
-
-
-def segment_repetition_filter(
-    df,
-    text_col: str = "text",
-    sep_pattern: str = "\n",
-    max_dup_seg_frac: float = 0.30,
-    max_dup_seg_char_frac: float = 0.20,
-):
-    """Keep documents under the Gopher duplicate-segment bounds
-    (paper defaults for lines; pass ``sep_pattern="\\n{2,}"`` and the
-    paragraph bounds for the paragraph rules). Compiled INLINE from
-    the same expressions as the stats (``_segment_dup_exprs``, one
-    source of truth) — a pure narrow filter at the scan, never a
-    join-back (the ``gopher_quality_filter`` discipline)."""
-    dup_frac, dup_char_frac, _ = _segment_dup_exprs(text_col, sep_pattern)
-    # rounded to 4 exactly like the stats surface — filter-at-bound
-    # and stats-at-bound agree
-    return df.filter(
-        (F.round(dup_frac, 4) <= max_dup_seg_frac)
-        & (F.round(dup_char_frac, 4) <= max_dup_seg_char_frac)
-    )
 
 
 def repetition_stats(
@@ -1815,15 +1780,3 @@ def fingerprint_md5(col: Column) -> Column:
     DuckDB oracle verbatim)."""
     norm = F.regexp_replace(F.trim(F.lower(col)), WS, " ")
     return F.md5(norm)
-
-
-def fingerprint_rolling(col: Column, base: int = 31, mod: int = 1_000_000_007) -> Column:
-    """Polynomial rolling hash over whitespace tokens (order-sensitive):
-    h = (h*base + token_hash) % mod. Native ``aggregate`` expression —
-    no UDF. token_hash uses crc32 for cross-run determinism."""
-    toks = tokens(col)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * base + F.pmod(F.crc32(t), F.lit(mod))) % mod,
-    )

@@ -16,11 +16,10 @@ query of two aggregates; nothing is stitched or windowed:
   from the day family, the histogram and the top-5 lists from sorted
   ``collect_list``s over the other families.
 
-Scale: the input is scanned once, column-pruned and predicate-pushed;
-a year-partitioned Parquet/Delta layout makes the day/year filters
-prune partitions, so a single-day query touches one partition. Each
-day's station and route lists are collected into one task before the
-top-5 slice: at most min(rides that day, stations²) entries per day.
+Scale: the input is scanned once, column-pruned and predicate-pushed.
+Each day's station and route lists are collected into one task before
+the top-5 slice: at most min(rides that day, stations²) entries per
+day.
 
 Semantics reproduced exactly (correctness-critical, SURVEY §1.2):
 - global ``duration > 2`` filter on every metric (reference :46);
@@ -265,50 +264,6 @@ def read_year_file(path: str | Path) -> dict[str, Any]:
     if isinstance(payload, dict):
         return {k: v for k, v in payload.items() if k != "year"}
     return {}
-
-
-def load_year_metrics(spark, path: str | Path) -> DataFrame:
-    """S16's engine-side analog (reference web/js/app.js:8–23): load a
-    materialized year document back as the per-day metrics table
-    (DAILY_METRICS_SCHEMA rows, date-sorted), so the range queries
-    (plans/range_metrics.py) can serve a UI from the document alone —
-    no recomputation, exactly like the browser consuming rides.json.
-
-    Scale note: a year document is ≤366 rows — driver-side parse +
-    createDataFrame is the right tool; the heavy lifting happened once
-    in ``compute_all_days``."""
-    from pyspark.sql.types import DoubleType, LongType
-
-    from wroclaw_bike_stats_spark.schemas import DAILY_METRICS_SCHEMA
-
-    # JSON erases the int/float distinction (JS serializes 0.0 as 0,
-    # and the reference's empty-day convention writes falsy aggregates
-    # as 0) — coerce per schema or createDataFrame's verifier rejects
-    # an int in a DoubleType field.
-    casts = {
-        f.name: (float if isinstance(f.dataType, DoubleType) else int)
-        for f in DAILY_METRICS_SCHEMA.fields
-        if isinstance(f.dataType, (DoubleType, LongType))
-    }
-
-    def _coerce(m: dict[str, Any]) -> dict[str, Any]:
-        return {
-            k: casts[k](v) if k in casts and v is not None else v
-            for k, v in m.items()
-        }
-
-    days = read_year_file(path)
-    rows = [{"ride_date": d, **_coerce(m)} for d, m in sorted(days.items())]
-    return spark.createDataFrame(rows, schema=DAILY_METRICS_SCHEMA)
-
-
-def available_dates(daily: DataFrame) -> list[str]:
-    """The UI's sorted available-date list (reference
-    web/js/app.js:17–23)."""
-    return [
-        r["ride_date"]
-        for r in daily.select("ride_date").distinct().orderBy("ride_date").collect()
-    ]
 
 
 def write_year_file(path: str | Path, year: int, days: dict[str, Any]) -> None:

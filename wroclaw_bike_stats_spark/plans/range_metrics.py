@@ -71,29 +71,27 @@ def range_metric_series(
 def range_histogram_avg(daily: DataFrame, start: str, end: str) -> DataFrame:
     """A16: per-hour rental counts summed across the range's days,
     divided by the day count, half-up rounded; all 24 hours present
-    (zero-filled), keys unpadded strings (app.js:155–163)."""
-    days = _in_range(daily, start, end)
-    per_hour = days.select(
-        F.explode("bike_rentals_histogram").alias("hour", "cnt")
-    ).groupBy("hour").agg(F.sum("cnt").alias("total"))
-    n_days = days.select(F.count(F.lit(1)).alias("n"))
+    (zero-filled), keys unpadded strings, in hour order
+    (app.js:155–163).
 
-    hours = days.sparkSession.range(24).select(
-        F.col("id").cast("string").alias("hour")
+    One aggregate collects the range's day count and histogram maps
+    into a single row; each of the 24 hours then folds its entries out
+    of those maps. No join: 2 jobs."""
+    days = _in_range(daily, start, end).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_list("bike_rentals_histogram").alias("hists"),
     )
-    return (
-        hours.join(per_hour, "hour", "left")
-        .crossJoin(F.broadcast(n_days))  # 1-row literal, not a data join
-        .select(
-            "hour",
-            F.round(
-                F.coalesce(F.col("total"), F.lit(0))
-                / F.greatest(F.col("n"), F.lit(1))
-            )
-            .cast("long")
-            .alias("avg_rentals"),
-        )
-        .orderBy(F.col("hour").cast("int"))
+    hour = F.col("hour").cast("string")
+    total = F.aggregate(
+        "hists",
+        F.lit(0).cast("long"),
+        lambda acc, hist: acc + F.coalesce(hist[hour], F.lit(0)),
+    )
+    return days.select(
+        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("hour"), "n", "hists"
+    ).select(
+        hour.alias("hour"),
+        F.round(total / F.greatest("n", F.lit(1))).cast("long").alias("avg_rentals"),
     )
 
 
@@ -148,9 +146,9 @@ def range_top_routes(
 # The reference's A17/A18 are approximations forced by its architecture
 # (the UI only has the materialized per-day top-5s). The engine also
 # offers the EXACT range aggregations over base rides — same filters and
-# tie-breaks as the daily plans, date-range predicate pushed to the scan
-# (prunes partitions on a ride_date-partitioned layout). SURVEY §2.4
-# A17 note: keep both; the approximate one is the parity surface.
+# tie-breaks as the daily plans, date-range predicate pushed to the
+# scan. SURVEY §2.4 A17 note: keep both; the approximate one is the
+# parity surface.
 
 
 def _range_facts(rides: DataFrame, start: str, end: str, family: str) -> DataFrame:

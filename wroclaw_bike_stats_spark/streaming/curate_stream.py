@@ -208,8 +208,8 @@ def read_window_index_store(
     broadcast_probe: bool = True,
 ) -> DataFrame | None:
     """The accumulated window index: per-batch parts re-aggregated by
-    the (count, canonical) monoid — identical result to folding each
-    part through ``span_dedup.merge_window_index``, in ONE groupBy.
+    the (count, canonical) monoid — counts add, canonicals take the
+    min — in ONE groupBy.
     Field metadata (span_k / span_scheme) survives the parquet
     round-trip, so the incremental strip's parameterization guard
     still fires on a mismatched store.
@@ -224,7 +224,7 @@ def read_window_index_store(
     that reads ~4M of them). EXACT for such a consumer: the monoid
     folds per ``h``, so dropping never-consulted hashes changes no
     surviving row — but the result is NOT the full index (do not
-    store it or pass it to ``merge_window_index``). ``broadcast_probe``
+    store it). ``broadcast_probe``
     mirrors the incremental operators' ``broadcast_new`` contract
     (False for a backfill-size probe)."""
     raw = _maybe(spark, _d(store_dir, "winindex"))
@@ -746,12 +746,11 @@ def compact_curation_store(
     subs: tuple | None = None,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
-    """Compact a curation store's append-accreted subdirs in place —
-    the maintenance counterpart of ``operators/maintenance.py``'s
-    partitioned compaction, for the FLAT stores this module appends
-    to (one parquet part per micro-batch: a year of daily ingests is
-    ~365 tiny files PER SUBDIR, and at 100 TB scan planning over
-    them starts to rival the scan itself).
+    """Compact a curation store's append-accreted subdirs in place,
+    for the FLAT stores this module appends to (one parquet part per
+    micro-batch: a year of daily ingests is ~365 tiny files PER
+    SUBDIR, and at 100 TB scan planning over them starts to rival
+    the scan itself).
 
     Per present subdir:
 
